@@ -960,7 +960,7 @@ def oriented_triangles(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
     # hub key's match set per row. Hashing d instead streams both.
     # Measured at sf1 (12M edges, local[32], noop): wedge+closure
     # 310.8 s (SMJ) -> 105.2 s (closure SHJ) -> 23.5 s (both SHJ); cold
-    # end-to-end c92 242.7 s -> ~44 s. Scale posture: the BUILD side is
+    # end-to-end c92 222.3 s -> 117.1 s. Scale posture: the BUILD side is
     # always the edge relation, whose per-partition hash footprint is
     # m/partitions rows (the cluster's shuffle-partition count scales
     # with the fact tables; AQE skew-split handles SHJ since Spark 3.2),

@@ -40,7 +40,8 @@ def _drop_width(spark: SparkSession, sf_dir: str, floor_n: int = 4) -> int:
     local drop layout (and each replay's micro-batch structure) stays
     byte-identical to the fixed-width rounds — and capped at the session
     shuffle-partition setting, which at cluster scale is the cluster's
-    own parallelism, not this repo's local default. Replay exactness is
+    own parallelism, not this repo's local default; a setting below the
+    floor caps at the floor. Replay exactness is
     slicing-invariant by construction (complete-mode/watermark arguments
     in each decl's docstring, fuzzed across random slicings in
     tools/fuzz_streaming.py), so the width moves only cost, never results.
@@ -57,7 +58,7 @@ def _drop_width(spark: SparkSession, sf_dir: str, floor_n: int = 4) -> int:
         session_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except Exception:  # pragma: no cover - conf always present in practice
         return n
-    return min(n, session_sp) if session_sp >= floor_n else n
+    return min(n, max(floor_n, session_sp))
 
 
 def c7_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:

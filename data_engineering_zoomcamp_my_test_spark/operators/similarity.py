@@ -14,6 +14,8 @@ Three tiers, mirroring how ANN is actually run at scale:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -396,6 +398,24 @@ def embed_neardup(
     return lsh_blocked_neardup(embeddings, threshold=threshold)
 
 
+_SALT_ENV = "SPARK_GRAFT_BLOCK_SALT_ROWS"
+
+
+def _block_salt_rows() -> int:
+    """Rows per salt group of a hot block, from ``$SPARK_GRAFT_BLOCK_SALT_ROWS``
+    (default 4096), read per call like ``lineage.cut``'s posture. Anything
+    but a positive integer raises: a zero or negative salt count would drop
+    every right-side row and return an empty pair set."""
+    raw = os.environ.get(_SALT_ENV, "").strip() or "4096"
+    try:
+        target = int(raw)
+    except ValueError:
+        target = 0
+    if target < 1:
+        raise ValueError(f"{_SALT_ENV}={raw!r}: expected a positive integer")
+    return target
+
+
 def _exact_blocked_neardup(
     embeddings: DataFrame, threshold: float, block_col: str
 ) -> DataFrame:
@@ -419,15 +439,13 @@ def _exact_blocked_neardup(
     the unsalted form (the replicate explode is a single element).
     AQE's skew-join split cannot do this — it cannot split one enormous
     KEY, only oversized partitions of distinct keys (guide §2.5)."""
-    import os
-
+    target = _block_salt_rows()
     embeddings = _pairable_vectors(embeddings)
     collapsed = _collapse_identical_vectors(embeddings, extra_keys=(block_col,))
     if collapsed is not None:
         mapping, reps = collapsed
         rep_pairs = _exact_blocked_neardup(reps, threshold, block_col)
         return _expand_vec_pairs(rep_pairs, mapping)
-    target = int(os.environ.get("SPARK_GRAFT_BLOCK_SALT_ROWS", 4096))
     emb = embeddings.withColumn("_norm", l2_norm("embedding"))
     splits = emb.groupBy(block_col).agg(
         F.ceil(F.count(F.lit(1)) / target).cast("int").alias("_bk")

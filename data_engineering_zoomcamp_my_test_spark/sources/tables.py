@@ -2,13 +2,24 @@
 
 Tables (TPC-H-ish star schema plus ``events``/``documents``/``embeddings``)
 live as one parquet file per table under a scale-factor directory. Loading is
-a plain ``spark.read.parquet`` — columnar scan, predicate pushdown and column
+a ``spark.read.parquet`` — columnar scan, predicate pushdown and column
 pruning come free from Catalyst — with one normalization: ``events.ts`` is
 written as parquet TIMESTAMP(NANOS), which Spark's vectorized reader cannot
 represent; we scan it as raw int64 nanos (``spark.sql.legacy.parquet
 .nanosAsLong``) and convert to a microsecond timestamp (``timestamp_micros(ns
 div 1000)``), matching the micro truncation every micro-precision engine
 (including the DuckDB oracle) applies.
+
+Schema resolution is served from a catalog instead of re-inspecting files per
+query: an untyped ``spark.read.parquet`` launches a one-task schema-inference
+job on every call. The first read of a local path infers as usual and caches
+the ``StructType`` under the path's file fingerprint (sorted relative name,
+size and ``st_mtime_ns`` of every file beneath it); later reads whose
+fingerprint still matches pass that schema to the reader and launch no job,
+while any rewrite changes the fingerprint, re-infers and replaces the entry
+(one entry per path, never a stale schema). Paths with no local files —
+URIs such as ``s3a://``, ``hdfs://`` or ``file:``, and missing paths, for
+which Spark raises its own error — bypass the cache.
 
 At 100 TB each "file" becomes a directory of many parquet parts (possibly
 hive-partitioned); nothing here assumes single-file inputs — paths are passed
@@ -21,6 +32,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES: tuple[str, ...] = (
     "region",
@@ -65,6 +77,50 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
+# Absolute path -> (file fingerprint, schema inferred for it).
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple:
+    """Sorted ``(relative file, size, st_mtime_ns)`` of every file under
+    ``path`` (the path itself when it is a file); empty when it has none
+    or a file vanishes mid-listing."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _dirs, names in os.walk(path):
+            for n in names:
+                full = os.path.join(root, n)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    except FileNotFoundError:
+        return ()
+    return tuple(sorted(files))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, skipping schema inference when the
+    files under a local ``path`` are unchanged since it last ran. A URI
+    (``s3a://``, ``file:``...) names no local file, so its fingerprint is
+    empty and it is read uncached, like a missing path.
+
+    The key needs no conf: every caller runs ``ensure_session_conf`` first,
+    which pins both settings that change inference (``nanosAsLong=true``,
+    ``inferTimestampNTZ=false``)."""
+    key = os.path.abspath(path)
+    fp = _fingerprint(key)
+    if not fp:
+        return spark.read.parquet(path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (fp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one named table from ``sf_dir``. Normalizes timestamp columns.
 
@@ -76,15 +132,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ensure_session_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
+    df = _read_parquet(spark, path)
     if name == "events":
-        df = spark.read.parquet(path)
         # Historical testdata wrote ts as parquet TIMESTAMP(NANOS), scanned
         # as int64 nanoseconds-since-epoch; truncate to micros. Current
         # testdata writes µs directly — guarded on the runtime dtype.
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return _normalize_timestamps(df)
-    return _normalize_timestamps(spark.read.parquet(path))
+    return _normalize_timestamps(df)
 
 
 def load_tables(

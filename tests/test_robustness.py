@@ -287,3 +287,70 @@ def test_curate_corpus_empty_heldout_and_empty_corpus(spark):
     assert [f.name for f in out.schema.fields] == [
         "doc_id", "source", "n_tok", "shard_id", "shard_pos",
     ]
+
+
+def _group_jobs(spark, group, fn):
+    """``fn()`` run under its own job group: its result and spawned job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.sc().clearJobGroup()  # noqa: SLF001
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_warm_read_spawns_no_jobs(spark, sf_small, monkeypatch):
+    """A cold load infers each table's schema with a Spark job; a second
+    load of unchanged files reuses the cached schema and launches none."""
+    from data_engineering_zoomcamp_my_test_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    _, cold_jobs = _group_jobs(spark, "load_cold", lambda: tables.load_tables(spark, sf_small))
+    assert cold_jobs, "cold load must infer schemas"
+    warm, warm_jobs = _group_jobs(spark, "load_warm", lambda: tables.load_tables(spark, sf_small))
+    assert warm_jobs == []
+    assert set(warm) == set(tables.TABLE_NAMES)
+    assert dict(warm["events"].dtypes)["ts"] == "timestamp"
+
+
+def test_load_table_rewrite_same_path_reinfers(spark, tmp_path, monkeypatch):
+    """Rewriting a table in place must never serve the old schema, and the
+    cache keeps one entry per path however often it is rewritten."""
+    from data_engineering_zoomcamp_my_test_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1,)], "a int").write.mode("overwrite").parquet(path)
+    assert tables.load_table(spark, str(tmp_path), "t").dtypes == [("a", "int")]
+    spark.createDataFrame([("x", 2)], "a string, b long").write.mode(
+        "overwrite"
+    ).parquet(path)
+    df = tables.load_table(spark, str(tmp_path), "t")
+    assert df.dtypes == [("a", "string"), ("b", "bigint")]
+    assert [tuple(r) for r in df.collect()] == [("x", 2)]
+    assert list(tables._SCHEMAS) == [path]
+
+
+def test_load_table_uri_path_bypasses_cache(spark, tmp_path, monkeypatch):
+    from data_engineering_zoomcamp_my_test_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    spark.createDataFrame([(7, "q")], "k int, v string").write.parquet(
+        str(tmp_path / "u.parquet")
+    )
+    df = tables.load_table(spark, f"file://{tmp_path}", "u")
+    assert [tuple(r) for r in df.collect()] == [(7, "q")]
+    assert tables._SCHEMAS == {}
+
+
+def test_load_table_missing_path_raises(spark, tmp_path, monkeypatch):
+    from pyspark.errors import AnalysisException
+
+    from data_engineering_zoomcamp_my_test_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        tables.load_table(spark, str(tmp_path), "absent")
+    assert tables._SCHEMAS == {}

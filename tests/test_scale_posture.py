@@ -4,6 +4,7 @@ joins, and keep operators free of driver materialization."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_zoomcamp_my_test_spark.operators import all_queries
@@ -755,18 +756,25 @@ def test_streaming_drop_width_is_byte_derived(spark, sf_small, monkeypatch):
     shuffle partitions), not a fixed repartition constant. At test SFs the
     events table is far below one 32 MB chunk, so the width equals the
     floor — the historical drop layout — while a 100 TB source scales."""
+    import os
+
     from data_engineering_zoomcamp_my_test_spark.operators.events import (
         _drop_width,
+    )
+    from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
+        dir_bytes,
     )
 
     assert _drop_width(spark, sf_small) == 4
     assert _drop_width(spark, sf_small, floor_n=2) == 2
     # a big source scales the width: force a tiny per-partition target
     monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITION_BYTES", "1024")
-    wide = _drop_width(spark, sf_small)
-    assert wide > 4
-    # ... but never past the session's shuffle-partition setting
-    assert wide <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+    chunks = -(-dir_bytes(os.path.join(sf_small, "events.parquet")) // 1024)
+    # ... capped at the session's shuffle-partition setting, which the
+    # micro-batch floor overrides when the setting sits below it
+    session_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert chunks > max(4, session_sp), "source too small to exercise the cap"
+    assert _drop_width(spark, sf_small) == max(4, session_sp)
 
 
 def test_no_fixed_width_repartition_constants_in_query_paths():
@@ -887,3 +895,22 @@ def test_c18_hot_block_salted_join(spark, sf_small, monkeypatch):
         map(tuple, _exact_blocked_neardup(emb, 0.9, "label").collect())
     )
     assert salted == base and base, (len(base), len(salted))
+
+
+@pytest.mark.parametrize("bad", ["0", "-1", "many"])
+def test_block_salt_rows_rejects_non_positive(spark, monkeypatch, bad):
+    """A salt target that is not a positive integer must fail loudly: a
+    zero or negative bucket count would drop every right-side row and
+    return an empty pair set."""
+    from data_engineering_zoomcamp_my_test_spark.operators.similarity import (
+        _exact_blocked_neardup,
+    )
+
+    emb = spark.range(4).select(
+        F.col("id").alias("vec_id"),
+        F.lit("hot").alias("label"),
+        F.array(F.lit(1.0), F.col("id").cast("double")).alias("embedding"),
+    )
+    monkeypatch.setenv("SPARK_GRAFT_BLOCK_SALT_ROWS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_BLOCK_SALT_ROWS"):
+        _exact_blocked_neardup(emb, 0.9, "label")

@@ -27,15 +27,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import BENCH_QUERIES
 from data_engineering_zoomcamp_my_test_spark.operators import all_queries
 from data_engineering_zoomcamp_my_test_spark.session import EngineConfig, get_spark
-
-BENCH_NAMES = [
-    "b3_groupby_agg", "b7_join_multiway", "b10_join_range", "b14_win_rank",
-    "b16_win_frame", "b18_topk", "c1_dedup_exact", "c3_cosine_topk",
-    "c5_text_stats", "c7_tumbling", "c9_session", "c10_json_extract",
-    "c23_asof_join", "c33_minhash_jvm", "c34_rolling_1h", "c37_tfidf_top_term",
-]
 
 _JOIN_RE = re.compile(
     r"\b(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
@@ -92,7 +86,7 @@ def main() -> None:
     elif args.names:
         names = [n for n in args.names.split(",") if n]
     else:
-        names = BENCH_NAMES
+        names = BENCH_QUERIES
 
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
