@@ -183,9 +183,7 @@ def minhash_bands(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return bands
 
 
-def lsh_candidate_pairs(
-    docs: DataFrame, jvm: bool = True, collapse_exact: bool = True
-) -> DataFrame:
+def lsh_candidate_pairs(docs: DataFrame, collapse_exact: bool = True) -> DataFrame:
     """Candidate near-dup pairs: docs sharing any (band, band_hash) bucket.
     The only join is keyed on the bucket — sub-quadratic by construction.
 
@@ -195,13 +193,13 @@ def lsh_candidate_pairs(
     see the copies (c copies would cost c^2 per bucket)."""
     if collapse_exact and _has_exact_copies(docs, None):
         mapping, reps = _collapse_exact(docs, None)
-        rep_pairs = lsh_candidate_pairs(reps, jvm=jvm, collapse_exact=False)
+        rep_pairs = lsh_candidate_pairs(reps, collapse_exact=False)
         return _expand_pairs(rep_pairs, mapping)
     # Both self-join sides reference ``bands``; Catalyst inlines each
     # reference, so without a lineage cut the whole signature pipeline
     # (shingle explode + 32 array_min hash evaluations per doc) executes
     # twice — the same shared-relation policy as _simhash_band_pairs.
-    bands = (minhash_bands_jvm(docs) if jvm else minhash_bands(docs)).transform(lineage_cut)
+    bands = minhash_bands_jvm(docs).transform(lineage_cut)
     left = bands.alias("l")
     right = bands.alias("r")
     return (
@@ -219,85 +217,100 @@ def lsh_candidate_pairs(
     )
 
 
-def _has_exact_copies(docs: DataFrame, block_col: str | None) -> bool:
-    """Stats probe: does the corpus contain a meaningful share of exact
-    (block, text) duplicates? One scan, sketch-based — the same kind of
-    bounded plan probe ``token_jaccard_pairs`` already does for its
-    bitset-vs-prefix decision.
-
-    Cutoff 1.5: a copy ratio c inflates the pair join by at most ~c^2 for
-    the duplicated portion, so below ~1.5 the worst-case penalty (~2x) is
-    smaller than the collapse's own window + expansion overhead (measured
-    ~+3s at sf0.1, where the planted ratio is ~1.2); above it the c^2 term
-    dominates (42x measured at c = 10). The margin also absorbs
-    approx_count_distinct's ~2% error."""
-    n, nd = _copy_stats(docs, block_col)
-    return n >= 1.5 * max(nd, 1)
+# Copy ratio n / nd at which the exact-copy collapse pays: a ratio c
+# inflates the pair join by at most ~c^2 for the duplicated portion, so
+# below the cutoff the worst-case penalty (~2x) is smaller than the
+# collapse's own window + expansion overhead (measured ~+3s at sf0.1, where
+# the planted ratio is ~1.2); above it the c^2 term dominates (42x measured
+# at c = 10). The margin also absorbs approx_count_distinct's ~2% error.
+_COPY_RATIO_CUTOFF = 1.5
 
 
-def _copy_stats(docs: DataFrame, block_col: str | None) -> tuple[int, int]:
-    """(non-null text count, approx distinct (block, text) count) — the one
-    bounded action behind ``_has_exact_copies`` and the pair-list safety
-    valve's blow-up estimate."""
+def _copy_stats(
+    rows: DataFrame, block_col: str | None, key_col: str = "text"
+) -> tuple[int, int, bool]:
+    """``(n, nd, collapse)`` for the exact-copy collapse: the count of
+    collapsible rows, the approximate count of their distinct (block, key)
+    groups, and whether ``n / nd`` reaches the cutoff. One scan,
+    sketch-based — the single bounded action behind ``_has_exact_copies``
+    and the pair-list safety valve's blow-up estimate.
+
+    Only rows ``_collapse_exact`` can group are counted: a NULL key (and,
+    with ``block_col``, a NULL block) stays a singleton and never pairs, so
+    a corpus whose only "copies" are such rows must not trigger the
+    collapse — nor re-trigger it on the representatives, which still
+    carry every singleton."""
     blk = [F.col(block_col)] if block_col else []
-    # NULL texts are excluded from both counts (count(text) skips NULLs;
-    # the when() feeds approx_count_distinct NULL, which it ignores):
-    # they collapse to singletons and can never produce pairs, so a corpus
-    # whose only "copies" are NULLs must not trigger the collapse.
-    row = docs.agg(
-        F.count(F.col("text")).alias("n"),
-        F.approx_count_distinct(
-            F.when(
-                F.col("text").isNotNull(),
-                F.concat_ws("\x00", *blk, F.col("text")),
-            )
-        ).alias("nd"),
+    collapsible = F.col(key_col).isNotNull()
+    if block_col:
+        collapsible = collapsible & F.col(block_col).isNotNull()
+    row = rows.filter(collapsible).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.approx_count_distinct(F.struct(*blk, F.col(key_col))).alias("nd"),
     ).head()
-    return int(row["n"]), int(row["nd"])
+    n, nd = int(row["n"]), int(row["nd"])
+    return n, nd, n >= _COPY_RATIO_CUTOFF * max(nd, 1)
+
+
+def _has_exact_copies(
+    rows: DataFrame, block_col: str | None, key_col: str = "text"
+) -> bool:
+    """Stats probe: does the input hold a meaningful share of exact
+    (block, key) duplicates? (See ``_copy_stats``.)"""
+    return _copy_stats(rows, block_col, key_col)[2]
 
 
 def _collapse_exact(
-    docs: DataFrame, block_col: str | None
+    rows: DataFrame,
+    block_col: str | None,
+    id_col: str = "doc_id",
+    key_col: str = "text",
 ) -> tuple[DataFrame, DataFrame]:
-    """Collapse exact-duplicate texts (per block) to one representative.
+    """Collapse exact-duplicate keys (per block) to one representative —
+    the one exact-copy collapse behind every pairwise curation operator,
+    for texts (``doc_id``, ``text``) and vectors (``vec_id``,
+    ``embedding``) alike.
 
-    Returns ``(mapping, reps)``: ``mapping`` is (doc_id, rep_id) for every
-    input doc, ``reps`` is the docs rows whose doc_id is its group's minimum.
-    One window shuffle keyed on (block, text), paid ONCE — the collapsed
+    Returns ``(mapping, reps)``: ``mapping`` is (``id_col``, rep_id) for
+    every input row, ``reps`` is the rows whose id is its group's minimum.
+    One window shuffle keyed on (block, key), paid ONCE — the collapsed
     relation is localCheckpoint-materialized because every consumer (plan
     probe, candidate join, expansion joins, CC node set) re-reads it.
 
     This is the standard pre-step before any pairwise near-dup operator:
-    identical texts are J == 1 pairs by definition, so pair JOIN work only
-    needs to run over *distinct* texts. Without it, a corpus where each
-    document has c exact copies pays c^2 x the candidate-join work for
-    information the group structure already contains (measured 11-16x
-    wall-clock at sf1, where the scale generator makes c = 10).
+    identical texts are J == 1 pairs and identical vectors cos == 1 pairs
+    by definition, and no projection, band or block can separate them, so
+    pair JOIN work only needs to run over *distinct* keys. Without it, c
+    exact copies cost c^2 x the candidate-join work for information the
+    group structure already contains (measured 11-16x wall-clock for text
+    pairs and 42x for vector pairs at sf1, where the scale generator makes
+    c = 10). Callers probe with ``_has_exact_copies`` first and expand the
+    representative pairs back with ``_expand_pairs``.
 
-    NULL-text rows — and, when ``block_col`` is set, NULL-*block* rows —
-    are singleton groups (rep_id = own doc_id), NOT one shared NULL group:
+    NULL-key rows — and, when ``block_col`` is set, NULL-*block* rows —
+    are singleton groups (rep_id = own id), NOT one shared NULL group:
     SQL window partitioning groups NULLs together, but the non-collapsed
     pair plans all *drop* those rows (null tokens / signatures never join,
     and the block equi-join ``a.block = b.block`` never matches NULLs), so
     a shared group would invent intra identity pairs the plain plan never
     emits. As singletons they pass through to the underlying plan, which
     drops them identically either way — preserving the
-    result-invisibility contract (differential-tested for both NULL text
-    and NULL block in ``test_operators_unit.py``).
+    result-invisibility contract (differential-tested for NULL text, NULL
+    block and NULL-block vectors in ``test_operators_unit.py``).
     """
     from pyspark.sql.window import Window
 
     blk = [block_col] if block_col else []
-    w = Window.partitionBy(*blk, "text")
-    singleton = F.col("text").isNull()
+    w = Window.partitionBy(*blk, key_col)
+    singleton = F.col(key_col).isNull()
     if block_col:
         singleton = singleton | F.col(block_col).isNull()
-    with_rep = docs.withColumn(
+    with_rep = rows.withColumn(
         "rep_id",
-        F.when(singleton, F.col("doc_id")).otherwise(F.min("doc_id").over(w)),
+        F.when(singleton, F.col(id_col)).otherwise(F.min(id_col).over(w)),
     ).transform(lineage_cut)
-    mapping = with_rep.select("doc_id", "rep_id")
-    reps = with_rep.filter(F.col("doc_id") == F.col("rep_id")).drop("rep_id")
+    mapping = with_rep.select(id_col, "rep_id")
+    reps = with_rep.filter(F.col(id_col) == F.col("rep_id")).drop("rep_id")
     return mapping, reps
 
 
@@ -306,37 +319,36 @@ def _expand_pairs(
     mapping: DataFrame,
     val_col: str | None = None,
     intra_val: "F.Column | None" = None,
+    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Expand representative-level pairs back to all doc pairs: cross-group
-    pairs inherit the representatives' similarity value (copies are
-    identical, so the value is theirs too); intra-group pairs get
-    ``intra_val`` (J == 1, cos == 1, hamming == 0 — identity similarity).
-    Linear in OUTPUT size — the quadratic candidate join never sees copies.
+    """Expand representative-level (``{id}_a``, ``{id}_b``) pairs back to
+    all member pairs: cross-group pairs inherit the representatives'
+    similarity value (copies are identical, so the value is theirs too);
+    intra-group pairs get ``intra_val`` (J == 1, cos == 1, hamming == 0 —
+    identity similarity). Linear in OUTPUT size — the quadratic candidate
+    join never sees copies.
     """
+    id_a, id_b = f"{id_col}_a", f"{id_col}_b"
     vals = [val_col] if val_col else []
-    ma = mapping.select(
-        F.col("rep_id").alias("doc_id_a"), F.col("doc_id").alias("_ma")
-    )
-    mb = mapping.select(
-        F.col("rep_id").alias("doc_id_b"), F.col("doc_id").alias("_mb")
-    )
+    ma = mapping.select(F.col("rep_id").alias(id_a), F.col(id_col).alias("_ma"))
+    mb = mapping.select(F.col("rep_id").alias(id_b), F.col(id_col).alias("_mb"))
     cross = (
-        rep_pairs.join(ma, "doc_id_a")
-        .join(mb, "doc_id_b")
+        rep_pairs.join(ma, id_a)
+        .join(mb, id_b)
         .select(
-            F.least("_ma", "_mb").alias("doc_id_a"),
-            F.greatest("_ma", "_mb").alias("doc_id_b"),
+            F.least("_ma", "_mb").alias(id_a),
+            F.greatest("_ma", "_mb").alias(id_b),
             *vals,
         )
     )
-    m1 = mapping.select("rep_id", F.col("doc_id").alias("_a"))
-    m2 = mapping.select("rep_id", F.col("doc_id").alias("_b"))
+    m1 = mapping.select("rep_id", F.col(id_col).alias("_a"))
+    m2 = mapping.select("rep_id", F.col(id_col).alias("_b"))
     intra = (
         m1.join(m2, "rep_id")
         .where(F.col("_a") < F.col("_b"))
         .select(
-            F.col("_a").alias("doc_id_a"),
-            F.col("_b").alias("doc_id_b"),
+            F.col("_a").alias(id_a),
+            F.col("_b").alias(id_b),
             *([intra_val.alias(val_col)] if val_col else []),
         )
     )
@@ -399,8 +411,7 @@ def token_jaccard_pairs(
             docs, threshold=threshold, block_col=block_col, tokens=tokens
         )
     if collapse_exact:
-        n, nd = _copy_stats(docs, block_col)
-        has_copies = n >= 1.5 * max(nd, 1)
+        n, nd, has_copies = _copy_stats(docs, block_col)
         if output == "pairs" and n > nd:
             # The pair LIST is the one honestly output-quadratic contract:
             # with uniform copy ratio c = n/nd the identity pairs ALONE are
@@ -408,7 +419,7 @@ def token_jaccard_pairs(
             # no plan can avoid (it is the answer). Warn past the threshold
             # so 100 TB callers reach for the linear forms instead of
             # discovering the contract the expensive way. Evaluated
-            # independently of the 1.5x collapse trigger: at n = 100M a
+            # independently of the collapse cutoff: at n = 100M a
             # copy ratio of just 1.25 already implies ~12.5M identity
             # pairs, so the blow-up estimate must not wait for the
             # collapse plan to be selected.

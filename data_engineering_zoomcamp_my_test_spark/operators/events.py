@@ -23,42 +23,24 @@ SESSION_GAP_MINUTES = 30
 
 
 def _drop_width(spark: SparkSession, sf_dir: str, floor_n: int = 4) -> int:
-    """Byte-derived landing width for streaming replay drop files
-    (guide §2.2 — scale-adaptive partitioning, not a local constant).
-
-    The streaming exact-oracle decls re-land the events table as parquet
-    drops before replaying them. r13 made the REPLAY side's shuffle
-    partitioning byte-derived but left the landing write at
-    ``repartition(4)`` — a fixed parallelism constant that would push the
-    whole fact table through 4 write tasks at any scale (VERDICT r13 #2).
-    Same rule as the replay side: ceil(source bytes / target, default
-    32 MB via ``$SPARK_GRAFT_STREAM_PARTITION_BYTES``), FLOORED at the
-    decl's documented micro-batch minimum — the replays run
+    """Landing width for the streaming replay drop files of ``events``:
+    ``stream_width`` over the events table, floored at the decl's
+    documented micro-batch minimum — the replays run
     ``maxFilesPerTrigger=1``, so drop-file count == micro-batch count and
-    the cross-batch state-merge evidence needs >= ``floor_n`` batches; at
+    the cross-batch state-merge evidence needs >= ``floor_n`` batches. At
     every test SF the events table sits far below one 32 MB chunk, so the
-    local drop layout (and each replay's micro-batch structure) stays
-    byte-identical to the fixed-width rounds — and capped at the session
-    shuffle-partition setting, which at cluster scale is the cluster's
-    own parallelism, not this repo's local default; a setting below the
-    floor caps at the floor. Replay exactness is
-    slicing-invariant by construction (complete-mode/watermark arguments
-    in each decl's docstring, fuzzed across random slicings in
-    tools/fuzz_streaming.py), so the width moves only cost, never results.
-    """
+    drop layout (and each replay's micro-batch structure) is the floor,
+    as it is when the table's size is unknown.
+    Replay exactness is slicing-invariant by construction (complete-mode/
+    watermark arguments in each decl's docstring, fuzzed across random
+    slicings in tools/fuzz_streaming.py), so the width moves only cost,
+    never results."""
     import os
 
-    from ..streaming.windows import dir_bytes
+    from ..streaming.windows import stream_width
 
-    target = int(
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITION_BYTES", 32 * 1024 * 1024)
-    )
-    n = max(floor_n, -(-dir_bytes(os.path.join(sf_dir, "events.parquet")) // target))
-    try:
-        session_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:  # pragma: no cover - conf always present in practice
-        return n
-    return min(n, max(floor_n, session_sp))
+    path = os.path.join(sf_dir, "events.parquet")
+    return stream_width(spark, path, floor_n) or floor_n
 
 
 def c7_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:

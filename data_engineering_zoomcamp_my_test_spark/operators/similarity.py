@@ -14,15 +14,15 @@ Three tiers, mirroring how ANN is actually run at scale:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.vectors import dot_product, l2_norm
 from ..lineage import cut as lineage_cut
+from ..session import env_positive_int
 from ..sources.tables import load_table
+from .dedup import _collapse_exact, _expand_pairs, _has_exact_copies
 
 
 def brute_force_topk(
@@ -298,79 +298,6 @@ def _pairable_vectors(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def _collapse_identical_vectors(
-    embeddings: DataFrame, extra_keys: tuple[str, ...] = ()
-) -> tuple[DataFrame, DataFrame] | None:
-    """Stats-probed exact-copy collapse for pairwise embedding operators.
-
-    Identical vectors are cos == 1 pairs by definition and can never be
-    separated by any projection or block, so they multiply every candidate
-    bucket they land in: c exact copies cost c^2 x the pair-join work
-    (measured 42x wall-clock at sf1, where the scale generator plants
-    c = 10). Returns ``(mapping, reps)`` — (vec_id, rep_id) for every row,
-    and one representative row per distinct (extra_keys, embedding) group —
-    or ``None`` when the corpus has no meaningful share of exact copies
-    (approx_count_distinct probe; the 1.5 cutoff mirrors dedup.py's
-    ``_has_exact_copies`` — below it the bounded ~c^2 penalty is cheaper
-    than the collapse overhead, and the sketch's ~2% error is absorbed).
-
-    Callers must pre-filter to pairable rows (``_pairable_vectors``):
-    NULL/zero-norm embeddings can never produce pairs, and excluding them
-    here keeps the probe honest — a corpus whose only "copies" are
-    unpairable rows must not trigger (or infinitely re-trigger) the
-    collapse."""
-    from pyspark.sql.window import Window
-
-    keys = [F.col(k) for k in extra_keys]
-    stats = embeddings.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.approx_count_distinct(F.struct(*keys, F.col("embedding"))).alias("nd"),
-    ).head()
-    if stats["n"] < 1.5 * max(stats["nd"], 1):
-        return None
-    w = Window.partitionBy(*extra_keys, "embedding")
-    with_rep = embeddings.withColumn(
-        "rep_id", F.min("vec_id").over(w)
-    ).transform(lineage_cut)
-    mapping = with_rep.select("vec_id", "rep_id")
-    reps = with_rep.filter(F.col("vec_id") == F.col("rep_id")).drop("rep_id")
-    return mapping, reps
-
-
-def _expand_vec_pairs(rep_pairs: DataFrame, mapping: DataFrame) -> DataFrame:
-    """Expand representative-level (vec_id_a, vec_id_b, cosine_sim) pairs to
-    all member pairs: cross-group pairs inherit the representatives' cosine
-    (identical vectors), intra-group pairs are cos == 1 by construction.
-    Linear in OUTPUT size — the candidate join never saw the copies."""
-    ma = mapping.select(
-        F.col("rep_id").alias("vec_id_a"), F.col("vec_id").alias("_ma")
-    )
-    mb = mapping.select(
-        F.col("rep_id").alias("vec_id_b"), F.col("vec_id").alias("_mb")
-    )
-    cross = (
-        rep_pairs.join(ma, "vec_id_a")
-        .join(mb, "vec_id_b")
-        .select(
-            F.least("_ma", "_mb").alias("vec_id_a"),
-            F.greatest("_ma", "_mb").alias("vec_id_b"),
-            "cosine_sim",
-        )
-    )
-    m1 = mapping.select("rep_id", F.col("vec_id").alias("_a"))
-    m2 = mapping.select("rep_id", F.col("vec_id").alias("_b"))
-    intra = (
-        m1.join(m2, "rep_id")
-        .where(F.col("_a") < F.col("_b"))
-        .select(
-            F.col("_a").alias("vec_id_a"),
-            F.col("_b").alias("vec_id_b"),
-            F.lit(1.0).alias("cosine_sim"),
-        )
-    )
-    return cross.unionByName(intra)
-
-
 def embed_neardup(
     embeddings: DataFrame,
     threshold: float = 0.9,
@@ -398,24 +325,6 @@ def embed_neardup(
     return lsh_blocked_neardup(embeddings, threshold=threshold)
 
 
-_SALT_ENV = "SPARK_GRAFT_BLOCK_SALT_ROWS"
-
-
-def _block_salt_rows() -> int:
-    """Rows per salt group of a hot block, from ``$SPARK_GRAFT_BLOCK_SALT_ROWS``
-    (default 4096), read per call like ``lineage.cut``'s posture. Anything
-    but a positive integer raises: a zero or negative salt count would drop
-    every right-side row and return an empty pair set."""
-    raw = os.environ.get(_SALT_ENV, "").strip() or "4096"
-    try:
-        target = int(raw)
-    except ValueError:
-        target = 0
-    if target < 1:
-        raise ValueError(f"{_SALT_ENV}={raw!r}: expected a positive integer")
-    return target
-
-
 def _exact_blocked_neardup(
     embeddings: DataFrame, threshold: float, block_col: str
 ) -> DataFrame:
@@ -439,13 +348,18 @@ def _exact_blocked_neardup(
     the unsalted form (the replicate explode is a single element).
     AQE's skew-join split cannot do this — it cannot split one enormous
     KEY, only oversized partitions of distinct keys (guide §2.5)."""
-    target = _block_salt_rows()
+    # a zero or negative salt count would drop every right-side row and
+    # return an empty pair set, so a bad value raises
+    target = env_positive_int("SPARK_GRAFT_BLOCK_SALT_ROWS", 4096)
     embeddings = _pairable_vectors(embeddings)
-    collapsed = _collapse_identical_vectors(embeddings, extra_keys=(block_col,))
-    if collapsed is not None:
-        mapping, reps = collapsed
+    if _has_exact_copies(embeddings, block_col, key_col="embedding"):
+        mapping, reps = _collapse_exact(
+            embeddings, block_col, id_col="vec_id", key_col="embedding"
+        )
         rep_pairs = _exact_blocked_neardup(reps, threshold, block_col)
-        return _expand_vec_pairs(rep_pairs, mapping)
+        return _expand_pairs(
+            rep_pairs, mapping, "cosine_sim", F.lit(1.0), id_col="vec_id"
+        )
     emb = embeddings.withColumn("_norm", l2_norm("embedding"))
     splits = emb.groupBy(block_col).agg(
         F.ceil(F.count(F.lit(1)) / target).cast("int").alias("_bk")
@@ -536,13 +450,16 @@ def lsh_blocked_neardup(
     from pyspark.ml.functions import array_to_vector, vector_to_array
 
     embeddings = _pairable_vectors(embeddings)
-    collapsed = _collapse_identical_vectors(embeddings)
-    if collapsed is not None:
-        mapping, reps = collapsed
+    if _has_exact_copies(embeddings, None, key_col="embedding"):
+        mapping, reps = _collapse_exact(
+            embeddings, None, id_col="vec_id", key_col="embedding"
+        )
         rep_pairs = lsh_blocked_neardup(
             reps, threshold, bucket_length, num_tables, rows_per_table
         )
-        return _expand_vec_pairs(rep_pairs, mapping)
+        return _expand_pairs(
+            rep_pairs, mapping, "cosine_sim", F.lit(1.0), id_col="vec_id"
+        )
 
     data = embeddings.withColumn(
         "features", array_to_vector(F.col("embedding").cast("array<double>"))

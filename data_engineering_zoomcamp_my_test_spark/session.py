@@ -24,6 +24,23 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 
+def env_positive_int(name: str, default: int) -> int:
+    """Read the size knob ``$name`` (unset or blank -> ``default``), per
+    call so a test or job can change it between operators. Anything but a
+    positive integer raises a ValueError naming the variable: a zero or
+    negative size silently breaks whatever divides or buckets by it."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        value = 0
+    if value < 1:
+        raise ValueError(f"{name}={raw!r}: expected a positive integer")
+    return value
+
+
 def _default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus:

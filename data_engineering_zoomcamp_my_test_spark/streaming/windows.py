@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exprs import dmoney_sum, money
+from ..session import env_positive_int
 
 EVENTS_DDL = (
     "event_id bigint, ts timestamp, user_id bigint, "
@@ -62,6 +63,24 @@ def dir_bytes(path: str) -> int:
     return total
 
 
+def stream_width(spark: SparkSession, path: str, floor_n: int) -> int | None:
+    """Byte-derived partition width for streaming data at ``path`` — the one
+    width rule for replay landing files and replay shuffles (guide §2.2 —
+    fewer, larger partitions when the data cannot fill them):
+    ceil(bytes / target), floored at ``floor_n`` and capped at the session
+    shuffle-partition setting (itself floored at ``floor_n``). The target is
+    ``$SPARK_GRAFT_STREAM_PARTITION_BYTES`` (default 32 MB); at cluster
+    scale the cap is the cluster's own parallelism, not a local default.
+    None when the size is unknown (``dir_bytes`` reads 0: a remote URI, a
+    missing or empty directory)."""
+    target = env_positive_int("SPARK_GRAFT_STREAM_PARTITION_BYTES", 32 * 1024 * 1024)
+    total = dir_bytes(path)
+    if total <= 0:
+        return None
+    session_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return min(max(floor_n, -(-total // target)), max(floor_n, session_sp))
+
+
 def _replay_shuffle_partitions(
     spark: SparkSession, source_dir: str
 ) -> tuple[str | None, int]:
@@ -71,32 +90,18 @@ def _replay_shuffle_partitions(
     maintenance) PER shuffle partition PER epoch, so a bounded replay
     whose batches are far smaller than the session's partitioning pays
     pure per-partition overhead: measured at sf0.1, the c87 dedup replay
-    runs 8.2 s at 32 partitions vs 3.8 s at 4 (guide §2.2 — fewer, larger
-    partitions when the data cannot fill them).  Derive the count from
-    the source's actual bytes (ceil(bytes / target), floor 4 so
-    cross-partition state stays exercised, capped at the session setting
-    so large inputs keep full parallelism — at cluster scale the cap is
-    what you get).  ``SPARK_GRAFT_STREAM_PARTITION_BYTES`` overrides the
-    per-partition target (default 32 MB).
+    runs 8.2 s at 32 partitions vs 3.8 s at 4. The count is
+    ``stream_width`` with floor 4, so cross-partition state stays
+    exercised; an unknown size, or a width at or above the session
+    setting, leaves the setting alone.
 
     Returns (previous setting or None, chosen count); the caller restores
     the previous value after the query stops.
     """
-    target = int(
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITION_BYTES", 32 * 1024 * 1024)
-    )
-    total = dir_bytes(source_dir)
-    if total <= 0:
-        return None, 0
-    try:
-        session_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return None, 0
-    n = max(4, -(-total // target))
-    n = min(n, session_sp) if session_sp > 0 else n
-    if n >= session_sp:
-        return None, 0
+    n = stream_width(spark, source_dir, floor_n=4)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if n is None or n >= int(prev):
+        return None, 0
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return prev, n
 

@@ -561,11 +561,13 @@ def test_collapse_null_block_rows_differential(spark):
 
 
 def test_collapse_zero_and_null_vector_differential(spark):
-    """Vector twin of the NULL-text test: NULL and zero-norm embeddings
-    are unpairable by contract (cosine undefined; ANSI mode would raise
-    DIVIDE_BY_ZERO) and must appear in NO pair, under BOTH plans — the
-    collapse must not invent cos == 1 intra pairs for them (ADVICE r4),
-    and the plain plan must not crash on the zero division."""
+    """Vector twin of the NULL-text and NULL-block tests: NULL and
+    zero-norm embeddings are unpairable by contract (cosine undefined;
+    ANSI mode would raise DIVIDE_BY_ZERO), and identical vectors under a
+    NULL block never meet in the block equi-join — all must appear in NO
+    pair, under BOTH plans. The collapse must not invent cos == 1 intra
+    pairs for them (ADVICE r4, r6), and the plain plan must not crash on
+    the zero division."""
     from data_engineering_zoomcamp_my_test_spark.operators.similarity import (
         embed_neardup,
     )
@@ -582,6 +584,9 @@ def test_collapse_zero_and_null_vector_differential(spark):
             rows.append((vid, "b0", [0.0, 0.0, 0.0, 0.0]))
             zero_null.append(vid); vid += 1
             rows.append((vid, "b0", None))
+            zero_null.append(vid); vid += 1
+        for _ in range(4):  # identical copies under a NULL block
+            rows.append((vid, None, [1.0, 2.0, 3.0, 4.0]))
             zero_null.append(vid); vid += 1
         copies = list(range(n_copies))
         return (

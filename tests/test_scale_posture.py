@@ -777,6 +777,28 @@ def test_streaming_drop_width_is_byte_derived(spark, sf_small, monkeypatch):
     assert _drop_width(spark, sf_small) == max(4, session_sp)
 
 
+@pytest.mark.parametrize("bad", ["0", "-1", "many"])
+def test_stream_partition_bytes_rejects_non_positive(
+    spark, tmp_path, monkeypatch, bad
+):
+    """The streaming width target divides the source bytes: anything but a
+    positive integer must raise a ValueError naming the variable, on both
+    the landing and the replay side, instead of a bare ZeroDivisionError
+    or a silent clamp."""
+    from data_engineering_zoomcamp_my_test_spark.operators.events import (
+        _drop_width,
+    )
+    from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
+        _replay_shuffle_partitions,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PARTITION_BYTES", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_PARTITION_BYTES"):
+        _drop_width(spark, str(tmp_path))
+    with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_PARTITION_BYTES"):
+        _replay_shuffle_partitions(spark, str(tmp_path))
+
+
 def test_no_fixed_width_repartition_constants_in_query_paths():
     """VERDICT r13 #2 'done' condition: grep-clean of repartition(<int>)
     in every operator/streaming module (scale-adaptive widths only)."""

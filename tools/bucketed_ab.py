@@ -2,9 +2,10 @@
 parquet scans (shuffle both sides into the SMJ) vs a co-bucketed layout
 (bucketBy + sortBy on the join key: shuffle-free, sort-free SMJ).
 
-Extends round-7's tools/bucket_bench.py (which measured the exchange
-elimination through the engine's save_table sink, SCALING.md "Bucketing,
-measured") with the SORT side of the story: Spark 3.0+ disables
+Extends round-7's tools/bucket_bench.py (since removed; recoverable from
+git history), which measured the exchange elimination through the
+engine's save_table sink (numbers kept in SCALING.md "Bucketing,
+measured"), with the SORT side of the story: Spark 3.0+ disables
 bucketed-scan outputOrdering by default (SPARK-28169), so bucket_bench's
 bucketed arm still sorted both sides inside the SMJ. This tool lands
 one-file-per-bucket sorted buckets and flips the legacy flag, driving
