@@ -2,7 +2,9 @@
 C1/C2/C6 + LLM-pipeline extensions).
 
 Scale design: every variant is a pure shuffle-on-key plan (groupBy text-key or
-signature-band) — no driver materialization, no cross join of the corpus.
+signature-band) — no driver materialization of documents, no cross join of
+the corpus. Only connected components collects, and only an edge list of
+at most ``_CC_DRIVER_EDGES`` pairs; larger graphs stay distributed.
 
 - exact dedup: hash-groupBy on the raw text (one shuffle keyed by text);
 - normalized dedup: same, keyed on a canonical text form;
@@ -23,6 +25,7 @@ import logging
 import zlib
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -798,11 +801,10 @@ def _simhash_band_pairs(
     )
 
 
-# Small-graph mode broadcasts the label map every round: 1M nodes of
-# (long, long) is ~16 MB serialized — comfortably under the 8 GB broadcast
-# ceiling and cheap to rebuild per round. Above this, broadcasting each
-# round costs more than the shuffle it saves.
-_CC_SMALL_GRAPH_NODES = 1_000_000
+# One collect of 1M (src, dst) id pairs is ~16 MB on the driver. Below this
+# bound a driver union-find beats any number of distributed rounds, whose
+# per-round job latency, not compute, dominates small graphs.
+_CC_DRIVER_EDGES = 1_000_000
 
 
 def connected_components_star(
@@ -829,8 +831,8 @@ def connected_components_star(
     Both emissions are canonically oriented (big, small) and distinct, so
     the fixpoint — every component a star rooted at its minimum id — is
     detected by exact set equality of consecutive edge sets (count + one
-    ``exceptAll`` probe; no hash shortcut that could silently lie). Unlike
-    the min-label twin, ids only need to be ORDERABLE, not numeric.
+    ``exceptAll`` probe; no hash shortcut that could silently lie). Ids
+    only need to be orderable, not numeric.
 
     Per round: two self-describing shuffles (groupBy min + join), both on
     the edge relation — no unbounded reducer state; ``localCheckpoint``
@@ -882,14 +884,41 @@ def connected_components_star(
             "rounds — structurally unreachable for max_iter >= 2*log2(n)+2; "
             "raise max_iter"
         )
+    return _label_ids(ids, id_col, e)
+
+
+def _label_ids(ids: DataFrame, id_col: str, labels: DataFrame) -> DataFrame:
+    """One row per ``ids`` row: ``(id, cluster)`` from the ``(a, b)`` =
+    (node, component minimum) rows in ``labels``; ids absent from it are
+    singletons and label themselves."""
     return (
         ids.select(F.col(id_col).alias("a"))
-        .join(e, "a", "left")
+        .join(labels, "a", "left")
         .select(
             F.col("a").alias(id_col),
             F.coalesce(F.col("b"), F.col("a")).alias("cluster"),
         )
     )
+
+
+def _union_find_minima(src: list, dst: list) -> dict:
+    """Map every node of the edge list to its component minimum. The smaller
+    root always wins a union, so each root is its component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        while (p := parent[x]) != x:
+            parent[x] = x = parent[p]  # path halving
+        return x
+
+    for a, b in zip(src, dst):
+        ra = find(parent.setdefault(a, a))
+        rb = find(parent.setdefault(b, b))
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return {n: find(n) for n in parent}
 
 
 def connected_components(
@@ -898,128 +927,38 @@ def connected_components(
     id_col: str = "doc_id",
     src_col: str = "doc_id_a",
     dst_col: str = "doc_id_b",
-    max_iter: int = 20,
-    edges_unique: bool = False,
-    algorithm: str = "auto",
+    max_iter: int = 25,
 ) -> DataFrame:
-    """Connected components by min-label propagation — the step that turns
-    pairwise near-dup candidates into duplicate *clusters* (keep one doc per
-    component).
-
-    Each round is ONE shuffle: neighbor labels and self labels are unioned
-    and min-aggregated per node (the self row also guarantees every node
-    survives, so no left join is needed). Convergence is detected from a
-    monotone scalar — labels only ever decrease, so the exact DECIMAL sum of
-    labels strictly decreases until the fixpoint; two equal consecutive sums
-    mean converged, with no compare-join. ``localCheckpoint`` truncates
-    lineage so plans stay bounded — the standard Spark formulation of an
-    iterative graph algorithm without GraphX.
-
-    Round latency, not round compute, dominates on small graphs, so the
-    operator is stats-adaptive (node count is known from initialization):
-    below ``_CC_SMALL_GRAPH_NODES`` it pins the label map to one partition,
-    broadcasts it into the edge join, drops shuffle parallelism, and turns
-    AQE off for the loop (fixed-shape per-round plans gain nothing from
-    runtime re-planning but pay its per-stage scheduling latency). At
-    cluster scale none of that applies and the same loop runs with shuffle
-    joins + AQE. Session confs are restored on exit.
-
-    ``edges_unique=True`` skips the symmetrize-distinct when the caller
-    guarantees one row per undirected pair (true for ``token_jaccard_pairs``
-    and ``lsh_candidate_pairs`` outputs).
-
-    Raises ``RuntimeError`` if labels are still changing after ``max_iter``
-    rounds (a component with diameter > max_iter): silently returning the
-    unconverged labels would be *wrong*, not just slow.
-
-    ``algorithm`` selects the round structure: ``"minlabel"`` (this loop),
-    ``"star"`` (:func:`connected_components_star`, O(log n) rounds), or
-    ``"auto"`` (default) — min-label while the graph fits the broadcastable
-    small-graph regime (round latency dominates and a handful of rounds
-    wins), large-star/small-star beyond it, where component diameter is
-    unbounded and O(log n) rounds is the difference between a job that
-    finishes and one that doesn't. Non-numeric ids always route to star
-    (min-label's DECIMAL convergence scalar needs numeric labels).
-    """
-    spark = ids.sparkSession
-    if algorithm not in ("auto", "minlabel", "star"):
-        raise ValueError(f"unknown connected-components algorithm {algorithm!r}")
-    from pyspark.sql.types import NumericType
-
-    numeric_ids = isinstance(ids.schema[id_col].dataType, NumericType)
-    if algorithm == "star" or (algorithm == "auto" and not numeric_ids):
+    """Connected components — the step that turns pairwise near-dup
+    candidates into duplicate *clusters*: one ``(id, cluster)`` row per
+    ``ids`` row, ``cluster`` the component's minimum id, singletons labelled
+    by themselves, edges with a NULL endpoint ignored. Edge lists of up to
+    ``_CC_DRIVER_EDGES`` rows are collected once through Arrow and solved by
+    a union-find on the driver, so a small graph costs one job instead of a
+    broadcast, a lineage cut and a convergence probe per round; Python
+    orders integers and strings as Spark does (UTF-8 byte order is
+    code-point order), so numeric and string ids take the same path. Larger edge lists run
+    :func:`connected_components_star` (O(log n) distributed rounds,
+    ``max_iter`` bounds them)."""
+    collected = (
+        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
+        .limit(_CC_DRIVER_EDGES + 1)
+        .toArrow()
+    )
+    if collected.num_rows > _CC_DRIVER_EDGES:
         return connected_components_star(
-            ids, edges, id_col, src_col, dst_col, max_iter=max(max_iter, 25)
+            ids, edges, id_col, src_col, dst_col, max_iter=max_iter
         )
-    if not numeric_ids:
-        # minlabel explicitly requested: its convergence scalar is
-        # sum(label cast decimal) — a non-numeric id casts to NULL, the sum
-        # is NULL every round, and None == None would end the loop after
-        # round 1 with silently wrong clusters. Fail loudly instead.
-        raise TypeError(
-            f"connected_components(algorithm='minlabel') requires a numeric "
-            f"id column for its label-sum convergence check; {id_col!r} is "
-            f"{ids.schema[id_col].dataType.simpleString()} — use "
-            f"algorithm='star' or map ids to integers first"
-        )
-    n_nodes = ids.count()
-    small = n_nodes <= _CC_SMALL_GRAPH_NODES
-    if algorithm == "auto" and not small:
-        return connected_components_star(
-            ids, edges, id_col, src_col, dst_col, max_iter=max(max_iter, 25)
-        )
-    e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-    if not edges_unique:
-        e = e.distinct()
-    e = e.persist()
-    sym = e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-
-    labels = ids.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get("spark.sql.adaptive.enabled", "true"),
-        "spark.sql.shuffle.partitions": spark.conf.get("spark.sql.shuffle.partitions", "200"),
-    }
-    # conf mutation and all actions happen inside try so any failure —
-    # including the initial checkpoint — restores the session settings.
-    # NOTE: session confs are session-global; the loop assumes no other
-    # query is planned on this session concurrently (the engine's driver
-    # contract runs queries sequentially).
-    try:
-        if small:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            labels = labels.repartition(1)  # bounded-input: small-graph arm
-        labels = labels.transform(lineage_cut)
-        prev_sum = None
-        for _ in range(max_iter):
-            lab = F.broadcast(labels) if small else labels
-            contrib = sym.join(lab, sym.b == lab.id).select(
-                F.col("a").alias("id"), "label"
-            )
-            merged = contrib.unionAll(labels).groupBy("id").agg(
-                F.min("label").alias("label")
-            )
-            if small:
-                merged = merged.repartition(1)  # bounded-input: small-graph arm
-            merged = merged.transform(lineage_cut)
-            # exact (DECIMAL) sum: strictly decreases until the fixpoint
-            cur_sum = merged.agg(
-                F.sum(F.col("label").cast("decimal(38,0)"))
-            ).first()[0]
-            labels = merged
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} rounds; "
-                "raise max_iter — a component's diameter exceeds it"
-            )
-    finally:
-        e.unpersist()
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-    return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster"))
+    minima = _union_find_minima(
+        collected.column("a").to_pylist(), collected.column("b").to_pylist()
+    )
+    id_type = ids.schema[id_col].dataType
+    labels = ids.sparkSession.createDataFrame(
+        pa.table({"a": list(minima), "b": list(minima.values())}),
+        T.StructType([T.StructField("a", id_type), T.StructField("b", id_type)]),
+    )
+    return _label_ids(ids, id_col, labels)
 
 
 def dedup_clusters(
@@ -1032,12 +971,12 @@ def dedup_clusters(
     (doc_id, cluster) where cluster is the min doc_id reachable; docs in no
     pair form singleton clusters.
 
-    Exact-copy groups are collapsed BEFORE the pair join and the CC loop:
-    copies share their representative's component by a J == 1 edge, so the
-    graph only needs one node per distinct (block, text) — the iterative CC
-    never sees the copy multiplier, and the quadratic intra-group pair set
-    is never materialized at all (cluster labels re-attach through the
-    doc->rep mapping, which is linear). Label semantics are unchanged: a
+    Exact-copy groups are collapsed BEFORE the pair join and CC: copies
+    share their representative's component by a J == 1 edge, so the graph
+    only needs one node per distinct (block, text) — CC never sees the copy
+    multiplier, and the quadratic intra-group pair set is never materialized
+    at all (cluster labels re-attach through the doc->rep mapping, which is
+    linear). Label semantics are unchanged: a
     rep is its group's min doc_id, so the component-min over reps IS the
     component-min over all member docs. Copy-free corpora (stats probe)
     skip the collapse and run CC on the docs directly."""
@@ -1049,9 +988,7 @@ def dedup_clusters(
             collapse_exact=False,
             tokens=tokens,
         )
-        return connected_components(
-            docs.select("doc_id"), pairs, edges_unique=True
-        )
+        return connected_components(docs.select("doc_id"), pairs)
     mapping, reps = _collapse_exact(docs, block_col)
     rep_pairs = token_jaccard_pairs(
         reps,
@@ -1060,9 +997,7 @@ def dedup_clusters(
         collapse_exact=False,
         tokens=tokens,
     )
-    rep_clusters = connected_components(
-        reps.select("doc_id"), rep_pairs, edges_unique=True
-    )
+    rep_clusters = connected_components(reps.select("doc_id"), rep_pairs)
     return (
         mapping.join(
             rep_clusters.withColumnRenamed("doc_id", "rep_id"), "rep_id"

@@ -42,10 +42,7 @@ def env_positive_int(name: str, default: int) -> int:
 
 
 def _default_parallelism() -> int:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS")
-    if cpus:
-        return int(cpus)
-    return os.cpu_count() or 8
+    return env_positive_int("SPARK_GRAFT_CPUS", os.cpu_count() or 8)
 
 
 def _default_driver_memory() -> str:

@@ -282,7 +282,7 @@ def _drive_append_mode(
         d.startswith("epoch=") for d in (os.listdir(sink_dir) if os.path.isdir(sink_dir) else ())
     ):
         return spark.createDataFrame([], out.schema)
-    return spark.read.parquet(f"{sink_dir}/epoch=*")
+    return spark.read.schema(out.schema).parquet(f"{sink_dir}/epoch=*")
 
 
 def _attribution_join_plan(

@@ -155,29 +155,23 @@ def test_connected_components_known_graph(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 99: 99}
 
 
-def test_connected_components_rejects_non_numeric_ids(spark):
-    """Regression (ADVICE r2): a string id column casts to NULL in the
-    DECIMAL label-sum convergence scalar, ending the minlabel loop after
-    one round with silently wrong clusters — explicit minlabel must raise;
-    the default routes non-numeric ids to the star algorithm (which only
-    needs orderable ids) and clusters correctly."""
-    import pytest
-
+def test_connected_components_string_ids(spark):
+    """String ids cluster by Spark's string order: the driver union-find
+    compares Python strings, whose code-point order is Spark's UTF-8 byte
+    order."""
     from data_engineering_zoomcamp_my_test_spark.operators.dedup import (
         connected_components,
     )
 
     ids = spark.createDataFrame([("a",), ("b",), ("c",)], "doc_id string")
     edges = spark.createDataFrame([("a", "b")], "doc_id_a string, doc_id_b string")
-    with pytest.raises(TypeError, match="numeric id column"):
-        connected_components(ids, edges, algorithm="minlabel")
     out = {r.doc_id: r.cluster for r in connected_components(ids, edges).collect()}
     assert out == {"a": "a", "b": "a", "c": "c"}
 
 
 def test_connected_components_star_known_graph(spark):
     """Star algorithm on the same chain/triangle/singleton fixture as the
-    min-label test — identical output contract."""
+    driver test — identical output contract."""
     from data_engineering_zoomcamp_my_test_spark.operators.dedup import (
         connected_components_star,
     )
@@ -191,13 +185,11 @@ def test_connected_components_star_known_graph(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 99: 99}
 
 
-def test_star_beats_minlabel_round_count_on_long_chain(spark):
+def test_long_chain_star_rounds_and_driver_labels(spark):
     """The point of large-star/small-star: a 64-hop chain converges in
-    O(log n) rounds where min-label needs one round per hop. Assert the
-    asymmetry through max_iter: star succeeds within 12 rounds, min-label
-    raises its non-convergence error."""
-    import pytest
-
+    O(log n) rounds (within 12), where min-label propagation would need one
+    round per hop. The driver union-find has no rounds at all and labels
+    the same chain in one pass."""
     from data_engineering_zoomcamp_my_test_spark.operators.dedup import (
         connected_components,
         connected_components_star,
@@ -213,15 +205,80 @@ def test_star_beats_minlabel_round_count_on_long_chain(spark):
         for r in connected_components_star(ids, edges, max_iter=12).collect()
     }
     assert set(out.values()) == {0} and len(out) == n
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            ids, edges, max_iter=12, algorithm="minlabel"
-        ).collect()
+    out = {r.doc_id: r.cluster for r in connected_components(ids, edges).collect()}
+    assert set(out.values()) == {0} and len(out) == n
+
+
+def _known_graph(spark):
+    ids = spark.createDataFrame([(i,) for i in (1, 2, 3, 10, 11, 12, 99)], "doc_id long")
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11), (11, 12), (10, 12)],
+        "doc_id_a long, doc_id_b long",
+    )
+    return ids, edges
+
+
+def test_connected_components_star_fallback_above_edge_bound(spark, monkeypatch):
+    """An edge list longer than the driver bound runs the star rounds and
+    gives the same labels."""
+    from data_engineering_zoomcamp_my_test_spark.operators import dedup
+
+    calls = []
+    star = dedup.connected_components_star
+
+    def spy(*args, **kwargs):
+        calls.append(kwargs)
+        return star(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "_CC_DRIVER_EDGES", 2)
+    monkeypatch.setattr(dedup, "connected_components_star", spy)
+    ids, edges = _known_graph(spark)
+    out = {r.doc_id: r.cluster for r in dedup.connected_components(ids, edges).collect()}
+    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 99: 99}
+    assert calls == [{"max_iter": 25}]
+
+
+def test_connected_components_messy_edges_match_star(spark):
+    """Duplicate and reversed edges, self-loops, NULL endpoints and edge
+    endpoints missing from ``ids`` give star's labels: one row per id, NULL
+    edges ignored, a self-loop alone leaves a singleton."""
+    from data_engineering_zoomcamp_my_test_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    ids = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 5, 7, 7)], "doc_id long")
+    edges = spark.createDataFrame(
+        [(2, 1), (1, 2), (1, 2), (4, 4), (3, None), (None, 5), (None, None),
+         (5, 6), (6, 3)],
+        "doc_id_a long, doc_id_b long",
+    )
+    key = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    got = key(connected_components(ids, edges))
+    assert got == key(connected_components_star(ids, edges))
+    assert got == [(1, 1), (2, 1), (3, 3), (4, 4), (5, 3), (7, 7), (7, 7)]
+
+
+def test_connected_components_build_runs_one_job(spark):
+    """Below the edge bound the whole solve is one collect of the edge
+    list: building the result runs exactly one Spark job (measured), with
+    no per-round cut, broadcast or convergence probe."""
+    from data_engineering_zoomcamp_my_test_spark.operators.dedup import (
+        connected_components,
+    )
+    from tests.test_robustness import _group_jobs
+
+    ids, edges = _known_graph(spark)
+    out, jobs = _group_jobs(spark, "cc_build", lambda: connected_components(ids, edges))
+    assert len(jobs) == 1
+    assert {r.doc_id: r.cluster for r in out.collect()} == {
+        1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 99: 99,
+    }
 
 
 def test_connected_components_long_chain_converges(spark):
-    """A 30-node chain needs label propagation over many hops — exercises
-    the iteration/convergence logic, not just one round."""
+    """A 12-node chain: every node takes the chain's minimum, however many
+    hops away it is."""
     from data_engineering_zoomcamp_my_test_spark.operators.dedup import (
         connected_components,
     )
@@ -457,9 +514,7 @@ def test_collapse_exact_pairs_differential(spark):
     # cluster labels must match the no-collapse CC result too
     expected = {
         (r.doc_id, r.cluster)
-        for r in connected_components(
-            docs.select("doc_id"), plain, edges_unique=True
-        ).collect()
+        for r in connected_components(docs.select("doc_id"), plain).collect()
     }
     got = {
         (r.doc_id, r.cluster)

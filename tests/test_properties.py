@@ -240,8 +240,8 @@ def test_jaccard_boundary_threshold_rounding(spark):
 
 
 def test_connected_components_matches_union_find(spark):
-    """Property: distributed min-label CC equals a python union-find on
-    random graphs (including multi-component and chain shapes)."""
+    """Property: CC equals a reference python union-find on random graphs
+    (including multi-component and chain shapes)."""
     rng = random.Random(31)
     for trial in range(3):
         n = 40
@@ -287,10 +287,10 @@ def test_connected_components_matches_union_find(spark):
         assert got == want, f"trial {trial}"
 
 
-def test_star_cc_matches_minlabel_random_graphs(spark):
+def test_star_cc_matches_driver_cc_random_graphs(spark):
     """Property: large-star/small-star CC produces the exact same
-    (id, cluster) assignment as the min-label twin on random graphs —
-    the two algorithms are interchangeable, only round complexity differs."""
+    (id, cluster) assignment as the driver union-find on random graphs —
+    the two arms of ``connected_components`` are interchangeable."""
     rng = random.Random(47)
     from data_engineering_zoomcamp_my_test_spark.operators.dedup import (
         connected_components,
@@ -313,13 +313,10 @@ def test_star_cc_matches_minlabel_random_graphs(spark):
             r.doc_id: r.cluster
             for r in connected_components_star(ids, edf).collect()
         }
-        minlabel = {
-            r.doc_id: r.cluster
-            for r in connected_components(
-                ids, edf, max_iter=40, algorithm="minlabel"
-            ).collect()
+        driver = {
+            r.doc_id: r.cluster for r in connected_components(ids, edf).collect()
         }
-        assert star == minlabel, f"trial {trial}"
+        assert star == driver, f"trial {trial}"
 
 
 def test_approx_percentiles_close_to_exact(spark, sf_small):

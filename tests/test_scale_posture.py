@@ -936,3 +936,17 @@ def test_block_salt_rows_rejects_non_positive(spark, monkeypatch, bad):
     monkeypatch.setenv("SPARK_GRAFT_BLOCK_SALT_ROWS", bad)
     with pytest.raises(ValueError, match="SPARK_GRAFT_BLOCK_SALT_ROWS"):
         _exact_blocked_neardup(emb, 0.9, "label")
+
+
+@pytest.mark.parametrize("bad", ["0", "-1", "many"])
+def test_cpus_knob_rejects_non_positive(monkeypatch, bad):
+    """The default parallelism sizes the local master and the shuffle width:
+    anything but a positive integer must raise a ValueError naming the
+    variable, not start a session on a nonsense core count."""
+    from data_engineering_zoomcamp_my_test_spark.session import (
+        _default_parallelism,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        _default_parallelism()
