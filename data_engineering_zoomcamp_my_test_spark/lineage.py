@@ -15,10 +15,10 @@ hard-coded call, via ``SPARK_GRAFT_LINEAGE_CUT``:
   whole JVM died anyway. This is the historical behavior — bench and
   oracle runs are byte-identical to pre-helper rounds.
 - ``reliable``: ``df.checkpoint()`` into the SparkContext checkpoint dir
-  (``sparkContext.setCheckpointDir`` — set it to HDFS/S3 on a cluster;
-  when unset, a session-scoped local temp dir is installed so the mode
-  is runnable everywhere). Survives executor loss at the cost of writing
-  the relation to (reliable) storage once.
+  (``sparkContext.setCheckpointDir`` — set it to HDFS/S3 on a cluster,
+  where an unset dir raises ``RuntimeError``; on a ``local`` master a
+  session-scoped temp dir is installed). Survives executor loss at the
+  cost of writing the relation to (reliable) storage once.
 - ``off``: no cut. The composed plan stays fully inspectable and Spark
   recovers any failure by recomputing lineage — at the price the r13
   measurements quantified (shared derivations re-execute per consumer).
@@ -54,11 +54,17 @@ def cut(df: DataFrame, eager: bool = True) -> DataFrame:
         return df
     if mode == "reliable":
         sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():  # noqa: SLF001
+        if sc.getCheckpointDir() is None:
+            # A driver-local temp dir is not reliable storage on a cluster:
+            # executors would write partition files to their own disks.
+            if not sc.master.startswith("local"):
+                raise RuntimeError(
+                    f"{_ENV}=reliable on master {sc.master!r} needs a shared "
+                    "checkpoint dir: call SparkContext.setCheckpointDir with "
+                    "an HDFS/S3 path before the first cut"
+                )
             from .tmpdirs import ephemeral_dir
 
-            # Local fallback so the mode is testable without a cluster;
-            # real deployments set a reliable (HDFS/S3) dir at submit time.
             sc.setCheckpointDir(ephemeral_dir("lineage_ckpt_"))
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)

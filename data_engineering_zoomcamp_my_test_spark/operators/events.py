@@ -11,6 +11,12 @@ timestamps: deterministic, timezone-free, and engine-portable.
 
 from __future__ import annotations
 
+import os
+import shutil
+import time
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -18,6 +24,18 @@ from pyspark.sql import functions as F
 from ..functions.exprs import dmoney_sum, money
 from ..lineage import cut as lineage_cut
 from ..sources.tables import load_table
+from ..streaming.stateful import streaming_user_ledger_exact
+from ..streaming.windows import (
+    batch_view_purchase_attribution,
+    run_streaming_attribution_replay,
+    run_streaming_dedup_replay,
+    run_streaming_latest_state_replay,
+    run_streaming_session_agg,
+    run_streaming_sliding_agg,
+    run_streaming_tumbling_agg,
+    stream_width,
+)
+from ..tmpdirs import ephemeral_dir
 
 SESSION_GAP_MINUTES = 30
 
@@ -35,10 +53,6 @@ def _drop_width(spark: SparkSession, sf_dir: str, floor_n: int = 4) -> int:
     watermark arguments in each decl's docstring, fuzzed across random
     slicings in tools/fuzz_streaming.py), so the width moves only cost,
     never results."""
-    import os
-
-    from ..streaming.windows import stream_width
-
     path = os.path.join(sf_dir, "events.parquet")
     return stream_width(spark, path, floor_n) or floor_n
 
@@ -404,8 +418,6 @@ def c72_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id (equi part) with the time band as a residual condition — a
     sort-merge join per user, never a cross product; the streaming form of
     the same plan bounds its state with watermarks (test-verified)."""
-    from ..streaming.windows import batch_view_purchase_attribution
-
     ev = load_table(spark, sf_dir, "events")
     out = batch_view_purchase_attribution(ev)
     return out.select(
@@ -417,12 +429,55 @@ def c72_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@contextmanager
+def _event_drops(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    floor_n: int = 4,
+    redeliver: str | None = None,
+):
+    """Land ``events`` as parquet file drops for a streaming replay decl and
+    yield the drop dir; the drops are removed when the block exits (they
+    are dead weight the moment the query stops).
+
+    The landing width is ``_drop_width`` at ``floor_n``; the replays run
+    ``maxFilesPerTrigger=1``, so each file is one micro-batch.
+    ``redeliver`` models an at-least-once source: every base file is
+    stamped 20 s in the past and then ``"all"`` of them, or only the
+    ``"first"`` in name order, are copied to ``redeliver_<name>`` stamped
+    now, so the ascending-mtime listing replays the copies in LATER
+    micro-batches."""
+    ev = load_table(spark, sf_dir, "events")
+    drop_dir = ephemeral_dir(f"{tag}_drops_")
+    try:
+        ev.repartition(_drop_width(spark, sf_dir, floor_n)).write.mode(
+            "overwrite"
+        ).parquet(drop_dir)
+        if redeliver is not None:
+            base = sorted(f for f in os.listdir(drop_dir) if f.endswith(".parquet"))
+            now = time.time()
+            for fname in base:
+                os.utime(os.path.join(drop_dir, fname), (now - 20.0, now - 20.0))
+            for fname in base if redeliver == "all" else base[:1]:
+                dst = os.path.join(drop_dir, f"redeliver_{fname}")
+                shutil.copyfile(os.path.join(drop_dir, fname), dst)
+                os.utime(dst, (now, now))
+        yield drop_dir
+    finally:
+        shutil.rmtree(drop_dir, ignore_errors=True)
+
+
+def _query_name(tag: str) -> str:
+    return f"{tag}_out_{uuid.uuid4().hex[:8]}"
+
+
 def c66_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming twin of c7, as a DRIVER-VERIFIED decl: the
     events table is re-landed as micro-precision parquet file drops,
     replayed through the watermarked streaming aggregation
     (``streaming/windows.py`` — maxFilesPerTrigger micro-batches,
-    complete mode, memory sink), and the stream's FINAL state is
+    complete mode, parquet sink), and the stream's FINAL state is
     returned. Because the final state of a complete-mode windowed agg
     over a replayed bounded source must equal the batch answer, this
     decl puts the streaming execution path itself under the exact DuckDB
@@ -433,35 +488,16 @@ def c66_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a single batch, which exercised no cross-batch state merge at
     all). Time-window complete-mode aggregation is exact under ANY
     slicing/arrival-order/watermark combination — fuzzed over 30+ random
-    draws incl. reverse-time arrival in tools/fuzz_streaming.py."""
-    import shutil
-    import uuid
+    draws incl. reverse-time arrival in tools/fuzz_streaming.py.
 
-    from ..streaming.windows import run_streaming_tumbling_agg
-    from ..tmpdirs import ephemeral_dir
-
-    ev = load_table(spark, sf_dir, "events")
-    drop_dir = ephemeral_dir("c66_drops_")
-    # The final state lands in a distributed parquet sink (r8: the memory
-    # sink serializes the whole state to the driver, which cannot scale —
-    # c78's 95M-session state broke spark.driver.maxResultSize at sf100).
-    # The sink dir must outlive this call: the returned DataFrame reads it
-    # lazily — so it lives under the session-scoped ephemeral parent that
-    # atexit reclaims (ADVICE r8: repeated sweeps leaked unbounded /tmp).
-    sink_dir = ephemeral_dir("c66_state_")
-    try:
-        ev.repartition(_drop_width(spark, sf_dir)).write.mode("overwrite").parquet(drop_dir)
-        out = run_streaming_tumbling_agg(
-            spark,
-            drop_dir,
-            query_name=f"c66_out_{uuid.uuid4().hex[:8]}",
-            max_files_per_trigger=1,
-            sink_dir=sink_dir,
+    The final state lands in a session-scoped ephemeral parquet sink: the
+    returned DataFrame reads it lazily, and a driver-side sink cannot
+    scale (c78's 95M-session state broke spark.driver.maxResultSize at
+    sf100)."""
+    with _event_drops(spark, sf_dir, "c66") as drops:
+        return run_streaming_tumbling_agg(
+            spark, drops, query_name=_query_name("c66"), max_files_per_trigger=1
         )
-    finally:
-        # The drops are dead weight the moment the query stops.
-        shutil.rmtree(drop_dir, ignore_errors=True)
-    return out
 
 
 def c78_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -469,7 +505,7 @@ def c78_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle: events are re-landed as parquet file drops and replayed
     through the watermarked ``session_window`` streaming aggregation
     (``streaming/windows.py::run_streaming_session_agg`` — micro-batches,
-    complete mode, memory sink). The stream's final state must equal the
+    complete mode, parquet sink). The stream's final state must equal the
     batch/SQL answer over the bounded replay, so the *stateful* streaming
     path (session state merge across micro-batches — a strictly harder
     state machine than c66's tumbling windows) gets a DuckDB hash check,
@@ -489,32 +525,14 @@ def c78_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-micro-batch replay (maxFilesPerTrigger=1 — previously one trigger,
     which never exercised cross-batch merge) provably lossless while
     still driving the real session-merge state machine."""
-    import shutil
-    import uuid
-
-    from ..streaming.windows import run_streaming_session_agg
-    from ..tmpdirs import ephemeral_dir
-
-    ev = load_table(spark, sf_dir, "events")
-    drop_dir = ephemeral_dir("c78_drops_")
-    # Distributed parquet sink (see c66): at sf100 this decl's final state
-    # is 95M sessions — the memory sink broke spark.driver.maxResultSize
-    # there; with foreachBatch the state never touches the driver. Session-
-    # scoped ephemeral dir: outlives this call, reclaimed at exit.
-    sink_dir = ephemeral_dir("c78_state_")
-    try:
-        ev.repartition(_drop_width(spark, sf_dir)).write.mode("overwrite").parquet(drop_dir)
-        out = run_streaming_session_agg(
+    with _event_drops(spark, sf_dir, "c78") as drops:
+        return run_streaming_session_agg(
             spark,
-            drop_dir,
-            query_name=f"c78_out_{uuid.uuid4().hex[:8]}",
+            drops,
+            query_name=_query_name("c78"),
             watermark="35 days",
             max_files_per_trigger=1,
-            sink_dir=sink_dir,
         )
-    finally:
-        shutil.rmtree(drop_dir, ignore_errors=True)
-    return out
 
 
 def c80_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -528,26 +546,10 @@ def c80_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r8): each batch updates BOTH overlapping window states per event
     and merges into prior-batch state; fuzzed exact across random
     window/slide/slicing/order/watermark draws (tools/fuzz_streaming.py)."""
-    import shutil
-    import uuid
-
-    from ..streaming.windows import run_streaming_sliding_agg
-    from ..tmpdirs import ephemeral_dir
-
-    ev = load_table(spark, sf_dir, "events")
-    drop_dir = ephemeral_dir("c80_drops_")
-    try:
-        ev.repartition(_drop_width(spark, sf_dir)).write.mode("overwrite").parquet(drop_dir)
-        out = run_streaming_sliding_agg(
-            spark,
-            drop_dir,
-            query_name=f"c80_out_{uuid.uuid4().hex[:8]}",
-            max_files_per_trigger=1,
-            sink_dir=ephemeral_dir("c80_state_"),
+    with _event_drops(spark, sf_dir, "c80") as drops:
+        return run_streaming_sliding_agg(
+            spark, drops, query_name=_query_name("c80"), max_files_per_trigger=1
         )
-    finally:
-        shutil.rmtree(drop_dir, ignore_errors=True)
-    return out
 
 
 def c86_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -561,35 +563,23 @@ def c86_streaming_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     35-day watermark bounds the 30-day corpus' worst-case disorder, making
     the appended output exact under any slicing/arrival order (same
     exactness-domain argument as c78's session watermark). Append-mode
-    output accumulates across epochs, so the drive lands each micro-batch
+    output accumulates across epochs, so the replay lands each micro-batch
     in an epoch-scoped parquet dir (exactly-once under retry) instead of
-    complete-mode's overwrite — see ``_drive_append_mode``, RocksDB state
-    store for the two-sided join state.
+    complete-mode's overwrite — see ``streaming/windows.py::_replay``,
+    RocksDB state store for the two-sided join state.
 
     maxFilesPerTrigger=1 over 4 hash-sliced drops = a genuine
     4-micro-batch replay: views and purchases of the same pair routinely
     land in DIFFERENT batches, exercising the cross-batch join-state path."""
-    import shutil
-    import uuid
-
-    from ..streaming.windows import run_streaming_attribution_replay
-    from ..tmpdirs import ephemeral_dir
-
-    ev = load_table(spark, sf_dir, "events")
-    drop_dir = ephemeral_dir("c86_drops_")
-    ckpt_dir = ephemeral_dir("c86_ckpt_")
-    try:
-        ev.repartition(_drop_width(spark, sf_dir)).write.mode("overwrite").parquet(drop_dir)
+    with _event_drops(spark, sf_dir, "c86") as drops:
         out = run_streaming_attribution_replay(
             spark,
-            drop_dir,
-            checkpoint=ckpt_dir,
+            drops,
+            checkpoint=ephemeral_dir("c86_ckpt_"),
             sink_dir=ephemeral_dir("c86_state_"),
-            query_name=f"c86_out_{uuid.uuid4().hex[:8]}",
+            query_name=_query_name("c86"),
             max_files_per_trigger=1,
         )
-    finally:
-        shutil.rmtree(drop_dir, ignore_errors=True)
     return out.select(
         "p_user",
         "purchase_id",
@@ -614,39 +604,15 @@ def c87_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     expires before its redelivery arrives (the only way a duplicate could
     leak through). 4 files at maxFilesPerTrigger=1 = 4 genuine batches,
     redeliveries always in batches 3-4."""
-    import os
-    import shutil
-    import time as _time
-    import uuid
-
-    from ..streaming.windows import run_streaming_dedup_replay
-    from ..tmpdirs import ephemeral_dir
-
-    ev = load_table(spark, sf_dir, "events")
-    drop_dir = ephemeral_dir("c87_drops_")
-    ckpt_dir = ephemeral_dir("c87_ckpt_")
-    try:
-        ev.repartition(_drop_width(spark, sf_dir, floor_n=2)).write.mode("overwrite").parquet(drop_dir)
-        base_files = sorted(
-            f for f in os.listdir(drop_dir) if f.endswith(".parquet")
-        )
-        now = _time.time()
-        for fname in base_files:
-            src = os.path.join(drop_dir, fname)
-            os.utime(src, (now - 20.0, now - 20.0))
-            dst = os.path.join(drop_dir, f"redeliver_{fname}")
-            shutil.copyfile(src, dst)
-            os.utime(dst, (now, now))
+    with _event_drops(spark, sf_dir, "c87", floor_n=2, redeliver="all") as drops:
         out = run_streaming_dedup_replay(
             spark,
-            drop_dir,
-            checkpoint=ckpt_dir,
+            drops,
+            checkpoint=ephemeral_dir("c87_ckpt_"),
             sink_dir=ephemeral_dir("c87_state_"),
-            query_name=f"c87_out_{uuid.uuid4().hex[:8]}",
+            query_name=_query_name("c87"),
             max_files_per_trigger=1,
         )
-    finally:
-        shutil.rmtree(drop_dir, ignore_errors=True)
     return out.select(
         "event_id",
         "user_id",
@@ -670,28 +636,15 @@ def c88_streaming_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     emissions land per-epoch (exactly-once), final state = max running
     count per user; 4-file drop at maxFilesPerTrigger=1 = 4 genuine
     batches of state carry-over."""
-    import shutil
-    import uuid
-
-    from ..streaming.stateful import streaming_user_ledger_exact
-    from ..tmpdirs import ephemeral_dir
-
-    ev = load_table(spark, sf_dir, "events")
-    drop_dir = ephemeral_dir("c88_drops_")
-    ckpt_dir = ephemeral_dir("c88_ckpt_")
-    try:
-        ev.repartition(_drop_width(spark, sf_dir)).write.mode("overwrite").parquet(drop_dir)
-        out = streaming_user_ledger_exact(
+    with _event_drops(spark, sf_dir, "c88") as drops:
+        return streaming_user_ledger_exact(
             spark,
-            drop_dir,
-            checkpoint=ckpt_dir,
+            drops,
+            checkpoint=ephemeral_dir("c88_ckpt_"),
             sink_dir=ephemeral_dir("c88_state_"),
-            query_name=f"c88_out_{uuid.uuid4().hex[:8]}",
+            query_name=_query_name("c88"),
             max_files_per_trigger=1,
         )
-    finally:
-        shutil.rmtree(drop_dir, ignore_errors=True)
-    return out
 
 
 def c89_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -706,41 +659,15 @@ def c89_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     fourth member of the exact-oracle streaming family (windowed-agg
     state c66/c78/c80, join state c86, dedup state c87, custom ledger
     state c88)."""
-    import os
-    import shutil
-    import time as _time
-    import uuid
-
-    from ..streaming.windows import run_streaming_latest_state_replay
-    from ..tmpdirs import ephemeral_dir
-
-    ev = load_table(spark, sf_dir, "events")
-    drop_dir = ephemeral_dir("c89_drops_")
-    ckpt_dir = ephemeral_dir("c89_ckpt_")
-    try:
-        ev.repartition(_drop_width(spark, sf_dir)).write.mode("overwrite").parquet(drop_dir)
-        base_files = sorted(
-            f for f in os.listdir(drop_dir) if f.endswith(".parquet")
-        )
-        now = _time.time()
-        for fname in base_files:
-            os.utime(
-                os.path.join(drop_dir, fname), (now - 20.0, now - 20.0)
-            )
-        first = os.path.join(drop_dir, base_files[0])
-        redeliver = os.path.join(drop_dir, f"redeliver_{base_files[0]}")
-        shutil.copyfile(first, redeliver)
-        os.utime(redeliver, (now, now))
+    with _event_drops(spark, sf_dir, "c89", redeliver="first") as drops:
         out = run_streaming_latest_state_replay(
             spark,
-            drop_dir,
-            checkpoint=ckpt_dir,
+            drops,
+            checkpoint=ephemeral_dir("c89_ckpt_"),
             state_dir=ephemeral_dir("c89_state_"),
-            query_name=f"c89_out_{uuid.uuid4().hex[:8]}",
+            query_name=_query_name("c89"),
             max_files_per_trigger=1,
         )
-    finally:
-        shutil.rmtree(drop_dir, ignore_errors=True)
     return out.select(
         "user_id",
         F.col("event_id").alias("last_event_id"),

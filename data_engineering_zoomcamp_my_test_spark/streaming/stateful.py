@@ -16,90 +16,24 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-EVENTS_DDL = (
-    "event_id bigint, ts timestamp, user_id bigint, "
-    "event_type string, value double, props string"
-)
+from .windows import _events_stream, _replay
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-STATE_SCHEMA = "n bigint, total double"
-
-
-def _make_ledger_fn():
-    """Built as a local closure so cloudpickle ships it by value — Python
-    workers never need this package importable (same rule as every other
-    UDF in this engine). Rounding state to 2 decimals each batch keeps the
-    running total exact for 2-decimal inputs (no float drift across
-    batches)."""
-
-    def update_user_ledger(
-        key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in batches:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        total = round(total, 2)
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return update_user_ledger
-
-
-def streaming_user_ledger(
-    spark: SparkSession, source_dir: str, query_name: str = "ledger_out"
-) -> DataFrame:
-    """Run the stateful ledger over the files currently in ``source_dir``
-    and return the latest per-user totals."""
-    stream = (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(source_dir)
-    )
-    ledger = stream.groupBy("user_id").applyInPandasWithState(
-        _make_ledger_fn(),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    q = (
-        ledger.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # update-mode memory sink keeps every emitted row; latest per user =
-    # the one with the max running count.
-    out = spark.table(query_name)
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        out.withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .drop("rn")
-    )
 
 
 def _make_exact_ledger_fn():
-    """Exact-cents variant: state accumulates INTEGER cents (HALF_UP on
-    the shortest decimal repr — the same convention as
+    """The ledger's update function: state accumulates INTEGER cents
+    (HALF_UP on the shortest decimal repr — the same convention as
     ``functions.exprs.cents`` / ``CAST(x AS DECIMAL(18,2))`` in both
     engines), so the running total is partition-, batch- and
     arrival-order-independent and the final ``cents / 100.0`` double is
     bit-identical to ``CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)``
-    in Spark AND DuckDB. This is what promotes the custom-stateful path
-    from approximate-parity tests to the exact driver oracle (c88)."""
+    in Spark AND DuckDB. This is what puts the custom-stateful path under
+    the exact driver oracle (c88)."""
     from decimal import ROUND_HALF_UP, Decimal
 
     def _cents(v) -> int:
@@ -172,19 +106,13 @@ def streaming_user_ledger_exact(
     """Drive the exact-cents stateful ledger over the files currently in
     ``source_dir`` and return the FINAL per-user totals, never touching the
     driver: update-mode emissions land per-epoch in ``sink_dir`` via the
-    shared ``_drive_append_mode`` driver (overwrite per epoch =
+    shared ``_replay`` sink (overwrite per epoch =
     exactly-once under retry, RocksDB state store — the per-user ledger
     state is key-cardinality-sized, exactly the case the heap-backed
     default provider dies on at scale), and the final state per user is
     the emission with the highest running count — a keyed window over the
     small ledger output, not over events."""
-    from .windows import _drive_append_mode
-
-    stream = (
-        spark.readStream.schema(EVENTS_DDL)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
+    stream = _events_stream(spark, source_dir, max_files_per_trigger)
     ledger = stream.groupBy("user_id").applyInPandasWithState(
         _make_exact_ledger_fn(),
         outputStructType=OUTPUT_SCHEMA,
@@ -200,30 +128,10 @@ def streaming_user_ledger_exact(
     # at sf0.1: 5.6 s at the session's 32 partitions vs 6.5 s at the
     # byte-derived 4. Compute-bound stateful ops size by cores, not by
     # state bytes.
-    out = _drive_append_mode(
-        spark,
-        ledger,
-        query_name,
-        checkpoint,
-        sink_dir,
-        output_mode="update",
-    )
-    from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
-
+    out = _replay(spark, ledger, query_name, sink_dir, "update", checkpoint)
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         out.withColumn("rn", F.row_number().over(w))
         .filter("rn = 1")
         .drop("rn")
-    )
-
-
-def batch_user_ledger(events: DataFrame) -> DataFrame:
-    """Batch twin used by the parity test."""
-    from pyspark.sql import functions as F
-
-    return events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
     )

@@ -77,7 +77,7 @@ def test_sliding_slide_never_exceeds_window():
 
 def test_fixed_cheap_replay_matches_oracle(spark, sf_small):
     """One deterministic tumbling replay through the full fuzzer path
-    (land -> stream -> memory sink -> DuckDB compare)."""
+    (land -> stream -> parquet sink -> DuckDB compare)."""
     from tests.oracle import compare
 
     p = {
@@ -94,9 +94,10 @@ def test_fixed_cheap_replay_matches_oracle(spark, sf_small):
 
 def test_fixed_cheap_dedup_replay_matches_oracle(spark, sf_small):
     """One deterministic redelivery-dedup replay through the full fuzzer
-    path: 2 drop files each delivered twice (the copies stamped with later
-    mtimes so they land in LATER micro-batches), and the streamed
-    dropDuplicatesWithinWatermark output must equal the base corpus."""
+    path (c87's epoch-scoped parquet sink): 2 drop files each delivered
+    twice (the copies stamped with later mtimes so they land in LATER
+    micro-batches), and the streamed dropDuplicatesWithinWatermark output
+    must equal the base corpus."""
     from tests.oracle import compare
 
     p = {
@@ -112,36 +113,13 @@ def test_fixed_cheap_dedup_replay_matches_oracle(spark, sf_small):
     # ADVICE r9: the replay must actually CROSS batches — redelivered copies
     # arriving in a later micro-batch than their originals is the keyed-state
     # path this op exists to test. 2 base + 2 redelivered files at
-    # maxFilesPerTrigger=1 must run as (at least) 4 batches, not 1.
+    # maxFilesPerTrigger=1 must run as (at least) 4 batches, not 1.  The
+    # count comes from recentProgress numInputRows>0: redelivery batches
+    # consume input rows but emit ZERO output rows, so counting sink epochs
+    # would under-count (ADVICE r11).
     from tools.fuzz_streaming import LAST_BATCH_COUNTS
 
     assert LAST_BATCH_COUNTS["ci_dedup"] >= 4, LAST_BATCH_COUNTS
-
-
-def test_fixed_epoch_parquet_dedup_counts_input_batches(spark, sf_small):
-    """Same replay through c87's epoch-scoped parquet sink.  Redelivery
-    batches consume input rows but emit ZERO output rows, so counting
-    data-carrying sink epochs under-counted multi-batch replays; the
-    count now comes from recentProgress numInputRows>0, same contract as
-    the memory path (ADVICE r11) — so the >=4 multi-batch pin holds on
-    this path too."""
-    from tests.oracle import compare
-    from tools.fuzz_streaming import LAST_BATCH_COUNTS
-
-    p = {
-        "dup_factor": 2,
-        "n_files": 2,
-        "max_files_per_trigger": 1,
-        "order": "hash",
-        "watermark": SESSION_SAFE_WATERMARKS[0],
-        "sink": "epoch_parquet",
-    }
-    df = run_case(spark, sf_small, "dedup", p, tag="ci_dedup_epoch")
-    res = compare(
-        "sfuzz_ci_dedup_epoch", df, OPERATORS["dedup"]["oracle"](p), sf_small
-    )
-    assert res.ok, res.mismatches
-    assert LAST_BATCH_COUNTS["ci_dedup_epoch"] >= 4, LAST_BATCH_COUNTS
 
 
 def test_fixed_attribution_epoch_replay_late_arrival(spark, sf_small):
@@ -161,7 +139,6 @@ def test_fixed_attribution_epoch_replay_late_arrival(spark, sf_small):
         "max_files_per_trigger": 1,
         "order": "reverse_time",
         "watermark": SESSION_SAFE_WATERMARKS[0],
-        "sink": "epoch_parquet",
     }
     df = run_case(spark, sf_small, "attribution", p, tag="ci_attr_epoch")
     res = compare(

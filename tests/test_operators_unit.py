@@ -276,6 +276,28 @@ def test_connected_components_build_runs_one_job(spark):
     }
 
 
+def test_connected_components_build_jobs_on_pair_plan(spark, sf_small):
+    """The same solve fed a real ``token_jaccard_pairs`` plan, as c36 feeds
+    it: under AQE the edge collect runs the pair plan's shuffle stage and
+    its result stage as separate jobs, so the build is 2 jobs (measured),
+    not the 1 a local edge list costs."""
+    from data_engineering_zoomcamp_my_test_spark.operators.dedup import (
+        connected_components,
+        token_jaccard_pairs,
+    )
+    from data_engineering_zoomcamp_my_test_spark.sources.tables import load_table
+    from tests.test_robustness import _group_jobs
+
+    docs = load_table(spark, sf_small, "documents")
+    pairs = token_jaccard_pairs(
+        docs, threshold=0.5, block_col="source", collapse_exact=False
+    )
+    _, jobs = _group_jobs(
+        spark, "cc_pair_build", lambda: connected_components(docs.select("doc_id"), pairs)
+    )
+    assert len(jobs) == 2, jobs
+
+
 def test_connected_components_long_chain_converges(spark):
     """A 12-node chain: every node takes the chain's minimum, however many
     hops away it is."""

@@ -750,6 +750,41 @@ def test_lineage_cut_postures(spark, sf_small, monkeypatch):
         lineage.cut(df)
 
 
+def test_reliable_cut_needs_checkpoint_dir_off_local(monkeypatch):
+    """``reliable`` on a non-local master with no checkpoint dir must fail
+    loudly: a driver-local temp dir is not reliable storage there. A set
+    dir proceeds, and a local master keeps the temp-dir fallback.
+    Session-free: the frame is a stub exposing what ``cut`` reads."""
+    from types import SimpleNamespace
+
+    from data_engineering_zoomcamp_my_test_spark import lineage
+
+    installed = []
+    sc = SimpleNamespace(
+        master="spark://head:7077",
+        dir=None,
+        setCheckpointDir=installed.append,
+    )
+    sc.getCheckpointDir = lambda: sc.dir
+    df = SimpleNamespace(
+        sparkSession=SimpleNamespace(sparkContext=sc),
+        checkpoint=lambda eager: "checkpointed",
+    )
+    monkeypatch.setenv("SPARK_GRAFT_LINEAGE_CUT", "reliable")
+
+    with pytest.raises(RuntimeError, match="SparkContext.setCheckpointDir"):
+        lineage.cut(df)
+    assert installed == []
+
+    sc.dir = "hdfs://nn/ckpt"
+    assert lineage.cut(df) == "checkpointed"
+    assert installed == []
+
+    sc.master, sc.dir = "local[2]", None
+    assert lineage.cut(df) == "checkpointed"
+    assert len(installed) == 1
+
+
 def test_streaming_drop_width_is_byte_derived(spark, sf_small, monkeypatch):
     """VERDICT r13 #2: the replay landing width must derive from source
     bytes (floor = the documented micro-batch minimum, cap = session

@@ -169,10 +169,18 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     survive. Stream result == batch dropDuplicates on the same rows."""
     from pyspark.sql import functions as F
 
-    from data_engineering_zoomcamp_my_test_spark.streaming.windows import run_streaming_dedup
+    from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
+        run_streaming_dedup_replay,
+    )
 
     src = str(tmp_path / "dup_src")
-    ckpt = str(tmp_path / "dup_ckpt")
+
+    def replay():
+        return run_streaming_dedup_replay(
+            spark, src, checkpoint=str(tmp_path / "dup_ckpt"),
+            sink_dir=str(tmp_path / "dup_sink"), query_name="dedup_out_t",
+            watermark="30 minutes",
+        )
 
     def mk(rows):
         return spark.createDataFrame(
@@ -184,16 +192,11 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
         )
 
     mk([(1, "2024-01-01 10:00:00"), (2, "2024-01-01 10:05:00")]).coalesce(1).write.parquet(src)
-    q = run_streaming_dedup(spark, src, ckpt, query_name="dedup_out_t")
-    try:
-        q.processAllAvailable()
-        # redelivery of event 1 + one new event, same watermark window
-        mk([(1, "2024-01-01 10:00:00"), (3, "2024-01-01 10:10:00")]).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-    got = sorted(r.event_id for r in spark.table("dedup_out_t").collect())
+    replay()
+    # redelivery of event 1 + one new event, same watermark window, replayed
+    # on the same checkpoint and sink
+    mk([(1, "2024-01-01 10:00:00"), (3, "2024-01-01 10:10:00")]).coalesce(1).write.mode("append").parquet(src)
+    got = sorted(r.event_id for r in replay().collect())
     assert got == [1, 2, 3], f"streaming dedup wrong: {got}"
 
 
@@ -203,11 +206,17 @@ def test_stream_stream_attribution_join_parity(spark, tmp_path):
 
     from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
         batch_view_purchase_attribution,
-        run_streaming_attribution_join,
+        run_streaming_attribution_replay,
     )
 
     src = str(tmp_path / "attr_src")
-    ckpt = str(tmp_path / "attr_ckpt")
+
+    def replay():
+        return run_streaming_attribution_replay(
+            spark, src, checkpoint=str(tmp_path / "attr_ckpt"),
+            sink_dir=str(tmp_path / "attr_sink"), query_name="attrib_t",
+            watermark="1 hour",
+        )
 
     def mk(rows):
         return spark.createDataFrame(
@@ -230,17 +239,10 @@ def test_stream_stream_attribution_join_parity(spark, tmp_path):
         (7, "2024-01-01 14:00:00", 9, "view"),       # advances both watermarks
     ]
     mk(rows1).coalesce(1).write.parquet(src)
-    q = run_streaming_attribution_join(spark, src, ckpt, query_name="attrib_t")
-    try:
-        q.processAllAvailable()
-        mk(rows2).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    replay()
+    mk(rows2).coalesce(1).write.mode("append").parquet(src)
     stream_rows = {
-        (r.p_user, r.purchase_id, r.view_id)
-        for r in spark.table("attrib_t").collect()
+        (r.p_user, r.purchase_id, r.view_id) for r in replay().collect()
     }
     batch_rows = {
         (r.p_user, r.purchase_id, r.view_id)
@@ -251,7 +253,7 @@ def test_stream_stream_attribution_join_parity(spark, tmp_path):
 
 def test_streaming_upsert_sink(spark, tmp_path):
     """foreachBatch MERGE: later batches update matching keys in the managed
-    table; replays are idempotent on the key."""
+    table; a second run on the same checkpoint merges only the new file."""
     from pyspark.sql import functions as F
 
     from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
@@ -271,14 +273,12 @@ def test_streaming_upsert_sink(spark, tmp_path):
         )
 
     mk([(1, "view", 1.0), (2, "view", 2.0)]).coalesce(1).write.parquet(src)
-    q = run_streaming_upsert_sink(spark, src, ckpt, table="t_stream_upsert")
     try:
-        q.processAllAvailable()
+        run_streaming_upsert_sink(spark, src, ckpt, table="t_stream_upsert")
         # key 2 updated, key 3 new
         mk([(2, "purchase", 20.0), (3, "view", 3.0)]).coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
+        run_streaming_upsert_sink(spark, src, ckpt, table="t_stream_upsert")
     finally:
-        q.stop()
         got = {r.event_id: (r.event_type, r.value)
                for r in spark.table("t_stream_upsert").collect()}
         spark.sql("DROP TABLE IF EXISTS t_stream_upsert")
@@ -372,7 +372,7 @@ def test_stream_stream_join_expires_state_past_watermark(spark, tmp_path):
 
     from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
         batch_view_purchase_attribution,
-        run_streaming_attribution_join,
+        run_streaming_attribution_replay,
     )
 
     def mk(rows):
@@ -398,21 +398,25 @@ def test_stream_stream_join_expires_state_past_watermark(spark, tmp_path):
     n_batch = batch_view_purchase_attribution(mk(b1 + b2)).count()
     assert n_batch == 1  # u1: view 10:00 -> purchase 10:10 within 30 min
 
+    # Two replays on one checkpoint and sink: the first run's trailing
+    # no-data batch advances the watermark before b2 lands.  Landing both
+    # files first and replaying once runs no batch between them, so the
+    # 1-hour arm would keep its match and pin nothing.
+    def replay(tag, wm):
+        return run_streaming_attribution_replay(
+            spark, str(tmp_path / f"src_{tag}"),
+            checkpoint=str(tmp_path / f"ckpt_{tag}"),
+            sink_dir=str(tmp_path / f"sink_{tag}"), query_name=tag,
+            watermark=wm, max_files_per_trigger=1,
+        )
+
     for wm, expect in (("1 hour", 0), ("1000 hours", 1)):
         tag = f"ssj_{wm.split()[0]}"
         src = str(tmp_path / f"src_{tag}")
         mk(b1).coalesce(1).write.parquet(src)
-        q = run_streaming_attribution_join(
-            spark, src, str(tmp_path / f"ckpt_{tag}"), query_name=tag,
-            watermark=wm, max_files_per_trigger=1,
-        )
-        try:
-            q.processAllAvailable()
-            mk(b2).coalesce(1).write.mode("append").parquet(src)
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        assert spark.table(tag).count() == expect, (wm, expect)
+        replay(tag, wm)
+        mk(b2).coalesce(1).write.mode("append").parquet(src)
+        assert replay(tag, wm).count() == expect, (wm, expect)
 
 
 def test_streaming_attribution_replay_multi_batch_exact(spark, sf_small, tmp_path):
@@ -520,8 +524,7 @@ def test_dedup_state_survives_query_restart(spark, sf_small, tmp_path):
     import time as _time
 
     from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
-        EVENTS_DDL,
-        _drive_append_mode,
+        run_streaming_dedup_replay,
     )
 
     events = load_table(spark, sf_small, "events")
@@ -534,15 +537,9 @@ def test_dedup_state_survives_query_restart(spark, sf_small, tmp_path):
     )
 
     def run_once():
-        stream = (
-            spark.readStream.schema(EVENTS_DDL)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        return run_streaming_dedup_replay(
+            spark, src, checkpoint=ckpt, sink_dir=sink, query_name="restart_t"
         )
-        deduped = stream.withWatermark(
-            "ts", "35 days"
-        ).dropDuplicatesWithinWatermark(["event_id"])
-        return _drive_append_mode(spark, deduped, "restart_t", ckpt, sink)
 
     # run 1: base files only, runs to completion and stops
     run_once()
@@ -568,7 +565,7 @@ def test_dedup_state_survives_query_restart(spark, sf_small, tmp_path):
 
 
 def test_replay_drivers_restore_state_store_conf(spark, sf_small, tmp_path):
-    """_drive_append_mode swaps in the RocksDB state-store provider for
+    """_drive swaps in the RocksDB state-store provider for
     the query's duration; a leaked conf would silently re-provider every
     later stateful query in the session. Pin restore on both the unset
     and explicitly-set initial states."""
@@ -717,3 +714,44 @@ def test_latest_state_survives_query_restart(spark, sf_small, tmp_path):
     assert sorted(map(tuple, out.select(cols).collect())) == sorted(
         map(tuple, want.select(cols).collect())
     )
+
+
+# Where the package may touch the Structured Streaming entry points: one
+# stream reader and one driver, so a second drive loop cannot grow back.
+_STREAM_ENTRY_POINTS = {
+    "readStream": "_events_stream",
+    "writeStream": "_drive",
+    "start": "_drive",
+}
+
+
+def test_one_stream_reader_and_one_driver():
+    """Source scan of the package: ``readStream`` appears only inside
+    ``streaming/windows.py::_events_stream`` and ``.writeStream``/``.start()``
+    only inside ``streaming/windows.py::_drive``, once each."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / (
+        "data_engineering_zoomcamp_my_test_spark"
+    )
+    hits = []
+    for py in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(py.read_text())
+        owner = {}
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for node in ast.walk(fn):
+                    owner.setdefault(id(node), fn.name)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                if node.func.attr == "start" and not node.args:
+                    hits.append(("start", py.name, owner.get(id(node.func))))
+            elif isinstance(node, ast.Attribute) and node.attr in (
+                "readStream",
+                "writeStream",
+            ):
+                hits.append((node.attr, py.name, owner.get(id(node))))
+    assert sorted(hits) == sorted(
+        (attr, "windows.py", fn) for attr, fn in _STREAM_ENTRY_POINTS.items()
+    ), hits

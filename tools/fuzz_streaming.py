@@ -2,7 +2,7 @@
 
 The catalog referees the Structured Streaming path at ONE fixed parameter
 point per operator (c66 tumbling 1h, c80 sliding 1h/30m, c78 session 30m —
-all with maxFilesPerTrigger=4 over 4 hash-sliced drops).  This tool fuzzes
+all with maxFilesPerTrigger=1 over 4 hash-sliced drops).  This tool fuzzes
 the dimensions that exercise the streaming STATE MACHINE itself and that no
 batch test can reach:
 
@@ -110,23 +110,13 @@ def _gen_session(rng: random.Random) -> dict:
 
 
 def _gen_attribution(rng: random.Random) -> dict:
-    # sink draw referees BOTH drive paths: the live memory-sink query and
-    # c86's epoch-scoped exactly-once parquet replay (_drive_append_mode)
-    return {
-        "attr_minutes": rng.choice([5, 10, 17, 30, 45, 61, 120]),
-        "sink": rng.choice(["memory", "epoch_parquet"]),
-    }
+    return {"attr_minutes": rng.choice([5, 10, 17, 30, 45, 61, 120])}
 
 
 def _gen_dedup(rng: random.Random) -> dict:
     # dup_factor = how many times every drop file is redelivered (the
-    # at-least-once source contract: Kafka redelivery, file re-drops);
-    # sink draw referees both drive paths (memory query vs c87's
-    # epoch-scoped exactly-once parquet replay)
-    return {
-        "dup_factor": rng.choice([2, 3]),
-        "sink": rng.choice(["memory", "epoch_parquet"]),
-    }
+    # at-least-once source contract: Kafka redelivery, file re-drops)
+    return {"dup_factor": rng.choice([2, 3])}
 
 
 def _oracle_tumbling(p: dict) -> str:
@@ -335,11 +325,9 @@ def _run_ledger(spark, drop_dir: str, p: dict, tag: str):
 
 def _input_batches(query_name: str) -> int:
     """Input-carrying micro-batch count (numInputRows > 0) of the last
-    ``_drive_append_mode`` run under ``query_name`` — the SAME contract
-    as the memory-sink paths' recentProgress count.  Counting data-
-    carrying sink epochs instead under-counts dedup replays, whose
-    redelivery batches consume input rows but emit zero output rows
-    (ADVICE r11)."""
+    streaming run under ``query_name``.  Counting data-carrying sink
+    epochs instead under-counts dedup replays, whose redelivery batches
+    consume input rows but emit zero output rows (ADVICE r11)."""
     from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
         LAST_RUN_BATCHES,
     )
@@ -457,55 +445,37 @@ def _land_drops(spark, sf_dir: str, p: dict, drop_dir: str) -> None:
 
 
 def _run_attribution(spark, drop_dir: str, p: dict, tag: str):
-    """Drive the stream-stream interval join to completion (append mode
-    needs a checkpoint; memory sink accumulates emitted matches)."""
+    """Replay the stream-stream interval join through c86's epoch-scoped
+    exactly-once parquet sink."""
     from pyspark.sql import functions as F
 
     from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
-        run_streaming_attribution_join,
         run_streaming_attribution_replay,
     )
 
-    proj = lambda df: df.select(  # noqa: E731 - shared output shape
-        "p_user",
-        "purchase_id",
-        "view_id",
-        F.unix_micros("view_ts").alias("view_us"),
-        F.unix_micros("purchase_ts").alias("purchase_us"),
-    )
     ckpt = tempfile.mkdtemp(prefix=f"sfuzz_ckpt_{tag}_")
     sink = tempfile.mkdtemp(prefix=f"sfuzz_sink_{tag}_")
     try:
-        if p.get("sink") == "epoch_parquet":
-            out = run_streaming_attribution_replay(
-                spark,
-                drop_dir,
-                checkpoint=ckpt,
-                sink_dir=sink,
-                query_name=f"sfuzz_{tag}",
-                attribution_window=f"{p['attr_minutes']} minutes",
-                watermark=p["watermark"],
-                max_files_per_trigger=p["max_files_per_trigger"],
-            )
-            # materialize before the sink dir is reclaimed below
-            out = proj(out)
-            mat = spark.createDataFrame(out.collect(), out.schema)
-            LAST_BATCH_COUNTS[tag] = _input_batches(f"sfuzz_{tag}")
-            return mat
-        q = run_streaming_attribution_join(
+        out = run_streaming_attribution_replay(
             spark,
             drop_dir,
-            ckpt,
+            checkpoint=ckpt,
+            sink_dir=sink,
             query_name=f"sfuzz_{tag}",
             attribution_window=f"{p['attr_minutes']} minutes",
             watermark=p["watermark"],
             max_files_per_trigger=p["max_files_per_trigger"],
+        ).select(
+            "p_user",
+            "purchase_id",
+            "view_id",
+            F.unix_micros("view_ts").alias("view_us"),
+            F.unix_micros("purchase_ts").alias("purchase_us"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return proj(spark.table(f"sfuzz_{tag}"))
+        # materialize before the sink dir is reclaimed below
+        mat = spark.createDataFrame(out.collect(), out.schema)
+        LAST_BATCH_COUNTS[tag] = _input_batches(f"sfuzz_{tag}")
+        return mat
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(sink, ignore_errors=True)
@@ -516,15 +486,15 @@ def _run_dedup(spark, drop_dir: str, p: dict, tag: str):
     ``dup_factor - 1`` more times with strictly LATER mtimes, so the
     ascending-mtime file listing delivers the redeliveries in later
     micro-batches (the state-crossing case, not just intra-batch dedup),
-    then assert ``dropDuplicatesWithinWatermark`` reduces the stream back
-    to the base corpus."""
+    then replay through c87's ``dropDuplicatesWithinWatermark`` arm, which
+    must reduce the stream back to the base corpus."""
     import os
     import time as _time
 
     from pyspark.sql import functions as F
 
     from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
-        run_streaming_dedup,
+        run_streaming_dedup_replay,
     )
 
     base_files = sorted(
@@ -537,56 +507,29 @@ def _run_dedup(spark, drop_dir: str, p: dict, tag: str):
             shutil.copyfile(os.path.join(drop_dir, fname), dst)
             t = now + 2.0 * r
             os.utime(dst, (t, t))
-    proj_cols = lambda df: df.select(  # noqa: E731 - shared output shape
-        "event_id",
-        "user_id",
-        F.unix_micros("ts").alias("ts_us"),
-        "event_type",
-        F.col("value").cast("decimal(18,2)").cast("double").alias("value_2dp"),
-        "props",
-    )
     ckpt = tempfile.mkdtemp(prefix=f"sfuzz_ckpt_{tag}_")
     sink = tempfile.mkdtemp(prefix=f"sfuzz_sink_{tag}_")
     try:
-        if p.get("sink") == "epoch_parquet":
-            from data_engineering_zoomcamp_my_test_spark.streaming.windows import (
-                run_streaming_dedup_replay,
-            )
-
-            out = run_streaming_dedup_replay(
-                spark,
-                drop_dir,
-                checkpoint=ckpt,
-                sink_dir=sink,
-                query_name=f"sfuzz_{tag}",
-                key_cols=("event_id",),
-                watermark=p["watermark"],
-                max_files_per_trigger=p["max_files_per_trigger"],
-            )
-            out = proj_cols(out)
-            mat = spark.createDataFrame(out.collect(), out.schema)
-            LAST_BATCH_COUNTS[tag] = _input_batches(f"sfuzz_{tag}")
-            return mat
-        q = run_streaming_dedup(
+        out = run_streaming_dedup_replay(
             spark,
             drop_dir,
-            ckpt,
+            checkpoint=ckpt,
+            sink_dir=sink,
             query_name=f"sfuzz_{tag}",
             key_cols=("event_id",),
             watermark=p["watermark"],
             max_files_per_trigger=p["max_files_per_trigger"],
+        ).select(
+            "event_id",
+            "user_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "event_type",
+            F.col("value").cast("decimal(18,2)").cast("double").alias("value_2dp"),
+            "props",
         )
-        try:
-            q.processAllAvailable()
-            # count only data-carrying batches: recentProgress can include
-            # zero-row progress ticks, which would let a collapsed replay
-            # masquerade as multi-batch (ADVICE r10)
-            LAST_BATCH_COUNTS[tag] = sum(
-                1 for pr in q.recentProgress if pr["numInputRows"] > 0
-            )
-        finally:
-            q.stop()
-        return proj_cols(spark.table(f"sfuzz_{tag}"))
+        mat = spark.createDataFrame(out.collect(), out.schema)
+        LAST_BATCH_COUNTS[tag] = _input_batches(f"sfuzz_{tag}")
+        return mat
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(sink, ignore_errors=True)
@@ -631,7 +574,7 @@ def run_case(spark, sf_dir: str, name: str, p: dict, tag: str):
             df = run_streaming_session_agg(
                 spark, drop_dir, gap=f"{p['gap_minutes']} minutes", **common
             )
-        # Memory-sink tables are materialized; force before the drops vanish.
+        # Materialize before the drops vanish.
         df = spark.createDataFrame(df.collect(), df.schema)
     finally:
         shutil.rmtree(drop_dir, ignore_errors=True)
