@@ -122,6 +122,30 @@ def test_fixed_cheap_dedup_replay_matches_oracle(spark, sf_small):
     assert LAST_BATCH_COUNTS["ci_dedup"] >= 4, LAST_BATCH_COUNTS
 
 
+def test_fixed_epoch_parquet_dedup_counts_input_batches(spark, sf_small):
+    """Three deliveries of each drop (dup_factor=3) in reverse_time order
+    through the epoch-scoped parquet sink.  The two redelivery rounds
+    consume input rows but emit zero output rows, so only a count of
+    input-carrying batches (recentProgress numInputRows>0) sees all six
+    files: 2 base + 4 redelivered at maxFilesPerTrigger=1 -> >= 6."""
+    from tests.oracle import compare
+    from tools.fuzz_streaming import LAST_BATCH_COUNTS
+
+    p = {
+        "dup_factor": 3,
+        "n_files": 2,
+        "max_files_per_trigger": 1,
+        "order": "reverse_time",
+        "watermark": SESSION_SAFE_WATERMARKS[0],
+    }
+    df = run_case(spark, sf_small, "dedup", p, tag="ci_dedup_epoch")
+    res = compare(
+        "sfuzz_ci_dedup_epoch", df, OPERATORS["dedup"]["oracle"](p), sf_small
+    )
+    assert res.ok, res.mismatches
+    assert LAST_BATCH_COUNTS["ci_dedup_epoch"] >= 6, LAST_BATCH_COUNTS
+
+
 def test_fixed_attribution_epoch_replay_late_arrival(spark, sf_small):
     """c86 parameter-space slice (VERDICT r11 #5): the epoch-scoped
     exactly-once replay of the stream-STREAM interval join, with a
