@@ -30,9 +30,9 @@ executor loss") for the cluster guidance.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
+
+from .session import env_choice
 
 _ENV = "SPARK_GRAFT_LINEAGE_CUT"
 _MODES = ("local", "reliable", "off")
@@ -45,11 +45,7 @@ def cut(df: DataFrame, eager: bool = True) -> DataFrame:
     ``DataFrame.localCheckpoint``) runs the materializing job NOW — call
     sites rely on that to stop Catalyst from inlining the derivation into
     every consumer."""
-    mode = os.environ.get(_ENV, "local").strip().lower() or "local"
-    if mode not in _MODES:
-        raise ValueError(
-            f"{_ENV}={mode!r}: expected one of {', '.join(_MODES)}"
-        )
+    mode = env_choice(_ENV, _MODES)
     if mode == "off":
         return df
     if mode == "reliable":

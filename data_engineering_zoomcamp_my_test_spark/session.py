@@ -19,6 +19,7 @@ sources/tables.py converts the raw nanos to a microsecond timestamp at load.
 from __future__ import annotations
 
 import os
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -41,6 +42,35 @@ def env_positive_int(name: str, default: int) -> int:
     return value
 
 
+def env_choice(name: str, choices: tuple[str, ...]) -> str:
+    """Read the mode knob ``$name``, case-insensitive (unset or blank ->
+    ``choices[0]``), per call like ``env_positive_int``. Any other value
+    raises a ValueError naming the variable and the accepted modes."""
+    mode = os.environ.get(name, "").strip().lower() or choices[0]
+    if mode not in choices:
+        raise ValueError(f"{name}={mode!r}: expected one of {', '.join(choices)}")
+    return mode
+
+
+# A JVM memory size as Spark's ``JavaUtils.byteStringAsBytes`` parses it: a
+# whole number with an optional binary unit (no fractions, no sign).
+_JVM_SIZE = re.compile(r"([0-9]+)(?:[kmgtp]b?|b)?", re.IGNORECASE)
+
+
+def env_jvm_size(name: str) -> str | None:
+    """Read the JVM memory-size knob ``$name`` (``"512m"``, ``"3g"``...);
+    unset or blank -> None. A malformed or zero size raises a ValueError
+    naming the variable instead of failing JVM launch with an opaque
+    error."""
+    raw = os.environ.get(name, "").strip()
+    if not raw:
+        return None
+    m = _JVM_SIZE.fullmatch(raw)
+    if m is None or int(m[1]) == 0:
+        raise ValueError(f"{name}={raw!r}: expected a positive JVM size such as 512m or 4g")
+    return raw
+
+
 def _default_parallelism() -> int:
     return env_positive_int("SPARK_GRAFT_CPUS", os.cpu_count() or 8)
 
@@ -52,7 +82,7 @@ def _default_driver_memory() -> str:
     local-mode JVM launchable on small hosts; on cluster deployments the
     driver/executor memory comes from submit-time conf, not this default.
     """
-    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    env = env_jvm_size("SPARK_GRAFT_DRIVER_MEM")
     if env:
         return env
     try:
@@ -129,6 +159,18 @@ class EngineConfig:
             # 5 minutes bounds the lag; inert for short-lived sessions
             # (bench/tests finish before the first tick).
             .config("spark.cleaner.periodicGC.interval", "5min")
+            # Generated code is cached per JVM in one LRU of
+            # spark.sql.codegen.cache.maxEntries classes, default 100. A
+            # warm pass over the 16 bench headliners needs ~154, so a
+            # cyclic pass evicts every class before its next use and each
+            # query pays Janino again (measured: ~140 compilations per warm
+            # pass at 100, 0-6 at 2048). One session running all 158 decls
+            # at sf0.01 with an unbounded cache compiles 1302 distinct
+            # classes, and 42 more on its second pass as AQE picks other
+            # plans; 2048 holds that working set with headroom. A static
+            # conf (spark.conf.set raises CANNOT_MODIFY_STATIC_CONFIG), so
+            # only effective at JVM launch, like the driver memory.
+            .config("spark.sql.codegen.cache.maxEntries", "2048")
         )
         for k, v in self.extra.items():
             b = b.config(k, v)

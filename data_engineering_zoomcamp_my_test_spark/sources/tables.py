@@ -16,8 +16,10 @@ job on every call. The first read of a local path infers as usual and caches
 the ``StructType`` under the path's file fingerprint (sorted relative name,
 size and ``st_mtime_ns`` of every file beneath it); later reads whose
 fingerprint still matches pass that schema to the reader and launch no job,
-while any rewrite changes the fingerprint, re-infers and replaces the entry
-(one entry per path, never a stale schema). Paths with no local files —
+and the session that made the last read gets that normalized frame back
+without a reader call. Any rewrite changes the fingerprint, re-infers and
+replaces the entry (one entry per path, never a stale schema or frame); a
+different or stopped session reads afresh. Paths with no local files —
 URIs such as ``s3a://``, ``hdfs://`` or ``file:``, and missing paths, for
 which Spark raises its own error — bypass the cache.
 
@@ -29,6 +31,7 @@ straight to the reader.
 from __future__ import annotations
 
 import os
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,8 +80,14 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     return df
 
 
-# Absolute path -> (file fingerprint, schema inferred for it).
-_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+class _Entry(NamedTuple):
+    fingerprint: tuple
+    schema: StructType  # as inferred from the files, before normalization
+    frame: DataFrame  # the normalized frame last read, bound to its session
+
+
+# Absolute path -> the one entry for the files last seen there.
+_TABLES: dict[str, _Entry] = {}
 
 
 def _fingerprint(path: str) -> tuple:
@@ -100,39 +109,8 @@ def _fingerprint(path: str) -> tuple:
     return tuple(sorted(files))
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)``, skipping schema inference when the
-    files under a local ``path`` are unchanged since it last ran. A URI
-    (``s3a://``, ``file:``...) names no local file, so its fingerprint is
-    empty and it is read uncached, like a missing path.
-
-    The key needs no conf: every caller runs ``ensure_session_conf`` first,
-    which pins both settings that change inference (``nanosAsLong=true``,
-    ``inferTimestampNTZ=false``)."""
-    key = os.path.abspath(path)
-    fp = _fingerprint(key)
-    if not fp:
-        return spark.read.parquet(path)
-    hit = _SCHEMAS.get(key)
-    if hit is not None and hit[0] == fp:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[key] = (fp, df.schema)
-    return df
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one named table from ``sf_dir``. Normalizes timestamp columns.
-
-    Applies ``ensure_session_conf`` first so the UTC-timezone invariant the
-    NTZ->LTZ cast relies on cannot be bypassed by a foreign session that
-    loads tables before configuring itself.
-    """
-    from ..session import ensure_session_conf
-
-    ensure_session_conf(spark)
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = _read_parquet(spark, path)
+def _normalize(df: DataFrame, name: str) -> DataFrame:
+    """Table ``name`` as read, with the engine's timestamp types."""
     if name == "events":
         # Historical testdata wrote ts as parquet TIMESTAMP(NANOS), scanned
         # as int64 nanoseconds-since-epoch; truncate to micros. Current
@@ -140,6 +118,43 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return _normalize_timestamps(df)
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one named table from ``sf_dir``. Normalizes timestamp columns.
+
+    Applies ``ensure_session_conf`` first, on every call, so the
+    UTC-timezone invariant the NTZ->LTZ cast relies on cannot be bypassed
+    by a foreign session that loads tables before configuring itself. That
+    also pins both settings that change inference (``nanosAsLong=true``,
+    ``inferTimestampNTZ=false``), so the cache key needs no conf.
+
+    A repeat load of unchanged local files by the same live session
+    returns the frame it got last time: building one costs a DataSource
+    resolution and file listing in the JVM (~10 ms), even with the schema
+    known. A URI (``s3a://``, ``file:``...) names no local file, so its
+    fingerprint is empty and it is read uncached, like a missing path.
+    """
+    from ..session import ensure_session_conf
+
+    ensure_session_conf(spark)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    key = os.path.abspath(path)
+    fp = _fingerprint(key)
+    if not fp:
+        return _normalize(spark.read.parquet(path), name)
+    hit = _TABLES.get(key)
+    if hit is None or hit.fingerprint != fp:
+        raw = spark.read.parquet(path)
+        schema = raw.schema
+    elif hit.frame.sparkSession is spark and spark._sc._jsc is not None:  # noqa: SLF001
+        return hit.frame
+    else:
+        schema = hit.schema
+        raw = spark.read.schema(schema).parquet(path)
+    df = _normalize(raw, name)
+    _TABLES[key] = _Entry(fp, schema, df)
+    return df
 
 
 def load_tables(

@@ -306,7 +306,7 @@ def test_load_table_warm_read_spawns_no_jobs(spark, sf_small, monkeypatch):
     load of unchanged files reuses the cached schema and launches none."""
     from data_engineering_zoomcamp_my_test_spark.sources import tables
 
-    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    monkeypatch.setattr(tables, "_TABLES", {})
     _, cold_jobs = _group_jobs(spark, "load_cold", lambda: tables.load_tables(spark, sf_small))
     assert cold_jobs, "cold load must infer schemas"
     warm, warm_jobs = _group_jobs(spark, "load_warm", lambda: tables.load_tables(spark, sf_small))
@@ -316,33 +316,36 @@ def test_load_table_warm_read_spawns_no_jobs(spark, sf_small, monkeypatch):
 
 
 def test_load_table_rewrite_same_path_reinfers(spark, tmp_path, monkeypatch):
-    """Rewriting a table in place must never serve the old schema, and the
-    cache keeps one entry per path however often it is rewritten."""
+    """Rewriting a table in place must never serve the old schema or frame,
+    and the cache keeps one entry per path however often it is rewritten."""
     from data_engineering_zoomcamp_my_test_spark.sources import tables
 
-    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    monkeypatch.setattr(tables, "_TABLES", {})
     path = str(tmp_path / "t.parquet")
     spark.createDataFrame([(1,)], "a int").write.mode("overwrite").parquet(path)
-    assert tables.load_table(spark, str(tmp_path), "t").dtypes == [("a", "int")]
+    first = tables.load_table(spark, str(tmp_path), "t")
+    assert first.dtypes == [("a", "int")]
+    assert tables.load_table(spark, str(tmp_path), "t") is first
     spark.createDataFrame([("x", 2)], "a string, b long").write.mode(
         "overwrite"
     ).parquet(path)
     df = tables.load_table(spark, str(tmp_path), "t")
+    assert df is not first
     assert df.dtypes == [("a", "string"), ("b", "bigint")]
     assert [tuple(r) for r in df.collect()] == [("x", 2)]
-    assert list(tables._SCHEMAS) == [path]
+    assert list(tables._TABLES) == [path]
 
 
 def test_load_table_uri_path_bypasses_cache(spark, tmp_path, monkeypatch):
     from data_engineering_zoomcamp_my_test_spark.sources import tables
 
-    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    monkeypatch.setattr(tables, "_TABLES", {})
     spark.createDataFrame([(7, "q")], "k int, v string").write.parquet(
         str(tmp_path / "u.parquet")
     )
     df = tables.load_table(spark, f"file://{tmp_path}", "u")
     assert [tuple(r) for r in df.collect()] == [(7, "q")]
-    assert tables._SCHEMAS == {}
+    assert tables._TABLES == {}
 
 
 def test_load_table_missing_path_raises(spark, tmp_path, monkeypatch):
@@ -350,7 +353,91 @@ def test_load_table_missing_path_raises(spark, tmp_path, monkeypatch):
 
     from data_engineering_zoomcamp_my_test_spark.sources import tables
 
-    monkeypatch.setattr(tables, "_SCHEMAS", {})
+    monkeypatch.setattr(tables, "_TABLES", {})
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         tables.load_table(spark, str(tmp_path), "absent")
-    assert tables._SCHEMAS == {}
+    assert tables._TABLES == {}
+
+
+def _jvm_calls(spark, fn):
+    """``fn()`` run with a spy on the py4j client: its result and the name
+    of every JVM method it called."""
+    client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+    sent = []
+    real = client.send_command
+
+    def spy(command, *args, **kwargs):
+        sent.append(command)
+        return real(command, *args, **kwargs)
+
+    client.send_command = spy
+    try:
+        out = fn()
+    finally:
+        del client.send_command
+    calls = [c.split("\n")[2] for c in sent if c.startswith("c\n")]
+    return out, calls
+
+
+def test_load_table_warm_read_returns_memoized_frame(spark, sf_small, monkeypatch):
+    """A warm load by the same session hands back the frame it got last
+    time; the only JVM calls left are ``ensure_session_conf``'s conf sets."""
+    from data_engineering_zoomcamp_my_test_spark.session import ensure_session_conf
+    from data_engineering_zoomcamp_my_test_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_TABLES", {})
+    cold = tables.load_table(spark, sf_small, "events")
+    _, conf_calls = _jvm_calls(spark, lambda: ensure_session_conf(spark))
+    warm, calls = _jvm_calls(spark, lambda: tables.load_table(spark, sf_small, "events"))
+    assert warm is cold
+    assert calls == conf_calls
+    assert set(calls) == {"set"}
+
+
+def test_load_table_other_session_gets_its_own_read(spark, sf_small, monkeypatch):
+    """A frame is bound to the session that read it: another session, or a
+    stopped one, gets a fresh read (from the cached schema, so no job), and
+    the entry then serves whichever session read last."""
+    from data_engineering_zoomcamp_my_test_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_TABLES", {})
+    mine = tables.load_table(spark, sf_small, "orders")
+    other = spark.newSession()
+    theirs, jobs = _group_jobs(spark, "load_other", lambda: tables.load_table(other, sf_small, "orders"))
+    assert jobs == []
+    assert theirs is not mine and theirs.sparkSession is other
+    assert tables.load_table(other, sf_small, "orders") is theirs
+    assert theirs.count() == mine.count()
+    again = tables.load_table(spark, sf_small, "orders")
+    assert again is not mine and again.sparkSession is spark
+    assert len(tables._TABLES) == 1
+
+    # SparkSession.stop() clears the context's JVM handle; the same Python
+    # session object must not be served its old frame afterwards.
+    monkeypatch.setattr(spark.sparkContext, "_jsc", None)
+    stopped = tables.load_table(spark, sf_small, "orders")
+    monkeypatch.undo()
+    assert stopped is not again
+
+
+def test_load_table_memo_hit_still_pins_foreign_confs(spark, sf_small, monkeypatch):
+    """A foreign session that unset the engine confs after its first load
+    still gets them back from a memoized load, and a fresh session gets
+    them on its first."""
+    from data_engineering_zoomcamp_my_test_spark.sources import tables
+
+    monkeypatch.setattr(tables, "_TABLES", {})
+    pinned = {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    }
+    foreign = spark.newSession()
+    for k in pinned:
+        foreign.conf.unset(k)
+    first = tables.load_table(foreign, sf_small, "events")
+    assert {k: foreign.conf.get(k) for k in pinned} == pinned
+    foreign.conf.set("spark.sql.session.timeZone", "America/New_York")
+    foreign.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    assert tables.load_table(foreign, sf_small, "events") is first
+    assert {k: foreign.conf.get(k) for k in pinned} == pinned
