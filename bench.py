@@ -1,6 +1,7 @@
 """Benchmark harness: runs the headline declared queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE JSON line with per-query wall-clock seconds.
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on the engine's default
+local session (session.py sizes it) and prints ONE JSON line with per-query
+wall-clock seconds.
 
 Each query is a full execute (results drained via count on the final plan,
 no driver-side materialization of payload rows beyond the driver's own
@@ -36,7 +37,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from data_engineering_zoomcamp_my_test_spark.operators import all_queries
-from data_engineering_zoomcamp_my_test_spark.session import EngineConfig, get_spark
+from data_engineering_zoomcamp_my_test_spark.session import (
+    EngineConfig,
+    env_positive_int,
+    get_spark,
+)
 
 # Headline set: scan-agg, multiway join, window, dedup, similarity, events.
 BENCH_QUERIES = [
@@ -58,7 +63,7 @@ BENCH_QUERIES = [
     "c37_tfidf_top_term",
 ]
 
-REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
+REPS = env_positive_int("SPARK_GRAFT_BENCH_REPS", 2)
 
 
 def _cpu_shares() -> list[int]:
@@ -71,14 +76,7 @@ def _cpu_shares() -> list[int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark = get_spark(
-        EngineConfig(
-            master=f"local[{cpus}]",
-            shuffle_partitions=cpus,
-            app_name="bench",
-        )
-    )
+    spark = get_spark(EngineConfig(app_name="bench"))
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
 
@@ -97,7 +95,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     for name in BENCH_QUERIES:
         best = None
-        for _ in range(max(1, REPS)):
+        for _ in range(REPS):
             t0 = time.perf_counter()
             df = queries[name](spark, sf_dir)
             df.count()
@@ -123,7 +121,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                "method": f"steady_state_min_of_{max(1, REPS)}_warmed",
+                "method": f"steady_state_min_of_{REPS}_warmed",
                 "steal_pct": steal_pct,
             }
         )

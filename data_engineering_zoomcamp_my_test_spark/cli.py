@@ -42,13 +42,16 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--sql", default=env("ENGINE_SQL"), help="SQL to run after ingest (default: COUNT(*))")
     p.add_argument("--out", default=env("ENGINE_OUT"), help="optional parquet output path for the query result")
     p.add_argument("--show", type=int, default=20, help="rows to print")
-    p.add_argument("--master", default=env("ENGINE_MASTER", f"local[{os.cpu_count()}]"))
+    p.add_argument("--master", default=env("ENGINE_MASTER"), help="Spark master (default: the engine's local session)")
     return p
 
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
-    spark = get_spark(EngineConfig(master=args.master, app_name="cli-ingest"))
+    config = EngineConfig(app_name="cli-ingest")
+    if args.master:
+        config.master = args.master
+    spark = get_spark(config)
     try:
         df = read_source(spark, args.source)
         written = save_table(df, args.table, if_exists=args.if_exists)

@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 
 MONEY = "decimal(18,2)"
 
+# The DuckDB oracle twin of ``dmoney_sum(money("value"), ...)``.
+MONEY_SUM_VALUE = "CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)"
+
 
 def money(col: Column | str) -> Column:
     """Exact 2-decimal representation of a monetary double column."""

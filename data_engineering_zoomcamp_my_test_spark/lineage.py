@@ -38,13 +38,12 @@ _ENV = "SPARK_GRAFT_LINEAGE_CUT"
 _MODES = ("local", "reliable", "off")
 
 
-def cut(df: DataFrame, eager: bool = True) -> DataFrame:
+def cut(df: DataFrame) -> DataFrame:
     """Materialize ``df`` once and truncate its lineage, per the
     session-level posture in ``$SPARK_GRAFT_LINEAGE_CUT`` (default
-    ``local``). ``eager=True`` (the default, matching
-    ``DataFrame.localCheckpoint``) runs the materializing job NOW — call
-    sites rely on that to stop Catalyst from inlining the derivation into
-    every consumer."""
+    ``local``). The materializing job runs NOW (eager): call sites rely on
+    that to stop Catalyst from inlining the derivation into every
+    consumer. ``off`` is the one switch that leaves every plan composed."""
     mode = env_choice(_ENV, _MODES)
     if mode == "off":
         return df
@@ -62,5 +61,5 @@ def cut(df: DataFrame, eager: bool = True) -> DataFrame:
             from .tmpdirs import ephemeral_dir
 
             sc.setCheckpointDir(ephemeral_dir("lineage_ckpt_"))
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -39,6 +39,13 @@ _MODULES = (
 # mandated declaration must therefore sit inside that window, ahead of the
 # extended/bonus variants.  ``_PRIORITY`` pins the first 50 explicitly;
 # everything not named keeps module registry order after it.
+#
+# Re-seat policy: the 43 mandated pins stay seated every round.  The last 7
+# seats rotate, in priority order, to (1) a decl whose operator or oracle
+# code changed since its last driver row, within 3 rounds of the change;
+# (2) a pin swapped out for one round the round before; (3) the decls with
+# the oldest driver row, round-robin.  The rotation history is in git and
+# the VERDICT coverage table.
 _PRIORITY = (
     # Tier A query-shaped decls
     "a8_count_star", "a9_limit", "a10_project_first10", "a11_lit_col",
@@ -52,11 +59,7 @@ _PRIORITY = (
     "b19_setops", "b20_case", "b21_string_fns",
     "b22_date_fns", "b23_math_fns", "b24_nulls", "b25_cast",
     "b26_cte", "b27_having", "b28_array_fns",
-    # Tier C mandated rows C1-C10.  The same-row companions that used to sit
-    # here (c13_knn_all, c9b_session_window, c21_json_agg, b9_join_semi's twin
-    # stays via b9_join_anti) are driver-green as of r3 and not SURVEY-mandated
-    # under their own names, so they rotated out to free extra seats
-    # (VERDICT r3 #1); their pinned twins remain the mandated coverage.
+    # Tier C mandated rows C1-C10
     "c1_dedup_exact", "c2_dedup_norm",
     "c3_cosine_topk", "c4_lsh_knn",
     "c5_text_stats",
@@ -64,136 +67,7 @@ _PRIORITY = (
     "c7_tumbling", "c8_sliding",
     "c9_session",
     "c10_json_extract",
-    # Rotation slots (round 6): the 43 decls above are SURVEY-mandated and
-    # pinned; the remaining 7 window seats rotate each round to decls that
-    # have never had a driver correctness row, retiring residual risk one
-    # batch at a time.  r2 seated c36/c43/c46, r3 seated c32/c49/c51,
-    # r4 seated b31/b32/b37/b38/b42/b43/c22, r5 seated c23/c24/c25/c26/
-    # c34/c35/c37 — all driver-green and rotated out.  r6 seats five from
-    # VERDICT r5 #1's batch plus the two streaming exact-oracle decls
-    # (VERDICT r5 #2: replayed micro-batch state vs batch SQL — the
-    # catalog's most novel correctness claims, swapped into the batch as
-    # the verdict allows; c47/c50 defer one round).
-    # Round 7 (VERDICT r6 #2): the rotation window is WIDENED for one
-    # round — six Tier-B pins that have been driver-green every round
-    # since r1 with untouched code (b11_cross, b17_sort, b19_setops,
-    # b20_case, b21_string_fns, b23_math_fns) rotate out to double seat
-    # throughput; they stay covered by the repo's sf0.01/sf0.1 parity
-    # layers and return to the pins in round 8.  The 13 seats follow the
-    # written drain plan (VERDICT r6 #1): the c80/c72/c47/c50 batch, then
-    # c52/c55/c64, the freshly bug-fixed c82 and semantics-fixed c57, and
-    # the b46-b49 TPC-H shapes.  Remaining never-seated after r7:
-    # b44/b45, c62/c63, c38/c39/c67, c18/c76, c14-c16/c20/c30/c31,
-    # c58-c61/c65/c68/c70/c71/c73-c75/c77/c79/c81/c83, c69, then the
-    # rows-only decls (c19/c45/c48/c53/c54).
-    # Round 8: the r7 one-round swap is honored — b11/b17/b19/b20/b21/
-    # b23 are RESTORED to the pins above, and the 13 r7 seats (all
-    # driver-green in CORRECTNESS_r07) rotate out.  To keep the doubled
-    # drain throughput the widening repeats with a DIFFERENT batch:
-    # b12_subq_scalar/b13_rollup/b15_win_lag/b22_date_fns/b24_nulls/
-    # b25_cast (each driver-green every round r1-r7 with untouched
-    # operator code) step out for exactly one round, covered meanwhile
-    # by the repo's own sf0.01/sf0.1 full-catalog parity sweeps, and
-    # return in round 9.  The 13 seats take the next batch of the
-    # written drain order: b44/b45, c62/c63, c38/c39/c67, c18/c76,
-    # c14/c15/c16/c20 — all pre-verified hash-green at sf0.01 by
-    # tools/parity_sweep.py before seating.
-    # Round 9 (VERDICT r8 #1/#2/#4): the r8 one-round swap is honored —
-    # b12/b13/b15/b22/b24/b25 are RESTORED to the pins above, and the
-    # 11 green r8 seats rotate out.  c38/c39 (the two r8 `err` rows —
-    # driver comparator crash on array cells, not wrong answers) are
-    # RE-SEATED with posexploded scalar projections, pre-verified
-    # hash-green at sf0.01 by the now-array-rejecting parity_sweep.
-    # Round 10 (VERDICT r9 #1/#3): the r9 one-round swap is honored —
-    # b11/b17/b19/b20/b21/b23/b26/b27 are RESTORED to the pins above,
-    # and the 15 green r9 seats rotate out.  Draining the ENTIRE
-    # never-driver-checked backlog this round (the stated r9 bar) needs
-    # 11 seats — the 5 exact-oracle holdouts, the 5 rows-only holdouts,
-    # plus the new c84 (the r10-built SimHash moments twin, seated the
-    # round it lands so it never joins a backlog) — so the one-round
-    # widening repeats with a FOURTH distinct batch: b10_join_range/
-    # b14_win_rank/b16_win_frame/b28_array_fns (each driver-green every
-    # seated round incl. r9, operator code untouched this round) step
-    # out for exactly one round, covered meanwhile by the repo's own
-    # sf0.01/sf0.1 full-catalog parity sweeps, and return in round 11.
-    # After this window seats green, every one of the 136 declared
-    # queries has driver-grade evidence — backlog ZERO.
-    #
-    # STANDING RE-SEAT POLICY from round 11 on (VERDICT r9 #3), once
-    # the backlog is zero:
-    #  - The 39 SURVEY-mandated pins above stay seated every round.
-    #  - The remaining ~11 seats go, in priority order, to:
-    #      1. any decl whose operator/oracle code changed since its
-    #         last driver row (must re-seat within <=3 rounds of the
-    #         change — tracked by comparing `git log` touch dates of
-    #         the operator module against the decl's last green round
-    #         in VERDICT's coverage table);
-    #      2. one-round returns of pins swapped out the previous round
-    #         (the swap contract above);
-    #      3. the decls with the OLDEST last-driver-row, round-robin,
-    #         so every non-pinned decl re-confirms within ~9 rounds at
-    #         11 seats/round even with zero code churn.
-    #    Every decl additionally re-confirms EVERY round via the repo's
-    #    full-catalog sf0.01+sf0.1 hash-parity layer (pytest
-    #    test_oracle_parity.py), so driver seats are the independent
-    #    re-attestation, not the only one.
-    # Round 11: the backlog is ZERO (every r10 seat came back green —
-    # CORRECTNESS_r10: 41 hash + 9 rows-only-by-design, 0 wrong) and the
-    # STANDING RE-SEAT POLICY applies for the first time.  The r10
-    # one-round swap is honored — b10/b14/b16/b28 are RESTORED to the
-    # pins above (rule 2), growing the pinned block to 43 and shrinking
-    # the rotation window to 7 seats.  Rule 1 seats c85_minhash_moments
-    # (built late in r10 after that window was fixed; repo-parity green
-    # at sf0.01/sf0.1 since birth).  Rule 3 starts the oldest-driver-row
-    # round-robin with the SIX stalest greens — all from CORRECTNESS_r01:
-    # b33/b34/b35/b36/b39/b40.  Remaining r1-era rows (b41/c17/c29) plus
-    # the r2-era batch (c36/c43/c46) queue for round 12.
-    # Round 12 (VERDICT r11 #1/#3): the seven r11 seats (all hash-green
-    # in CORRECTNESS_r11) rotate out.  Rule 1 takes priority: the EIGHT
-    # decls built in r11 after that round's window was fixed — the
-    # streaming trio c86/c87/c88 (the catalog's most novel state
-    # machines) and the TPC-H optimizer-stress shapes b50-b54 — seat
-    # NOW rather than spreading over two windows.  That needs 14 seats
-    # (8 rule-1 + the next 6 rule-3 stale rows: b41/c17/c29 from r1 and
-    # the r1 rows-only trio c27/c28/c33 whose hash families carry the
-    # c84/c85 exact moments twins), so the one-round widening repeats
-    # with a FIFTH distinct batch: b1_filter_pred/b2_project_expr/
-    # b4_distinct/b6_join_inner/b8_join_left/b9_join_anti/b18_topk
-    # (each driver-green EVERY round r1-r11 with untouched per-decl
-    # code) step out for exactly one round, covered meanwhile by the
-    # repo's own sf0.01/sf0.1 full-catalog parity sweeps, and return in
-    # round 13 under rule 2.  After this window seats green, driver
-    # evidence is back to the full catalog (145/145).
-    # Round 13 (VERDICT r12 #1): the 14 r12 seats (all green in
-    # CORRECTNESS_r12 — 11 hash + 3 rows-only-by-design) rotate out, and
-    # the r12 one-round swap is honored: b1/b2/b4/b6/b8/b9_join_anti/b18
-    # are RESTORED to the pins above (rule 2).  Rule 1 takes the TEN
-    # decls built in r12 after that round's window was fixed — the TPC-H
-    # completion shapes b55-b60 and the four new operator families
-    # c89_streaming_upsert / c90_pagerank / c91_bm25 / c92_triangle_count.
-    # 43 restored pins + 10 rule-1 seats exceeds the 50-decl window by 3,
-    # so the one-round widening repeats with a SIXTH distinct batch:
-    # b5_approx_distinct (rows-only by design every round; its spark_rows
-    # row carries the least marginal information of any pin) plus
-    # b26_cte / b27_having (driver-green every seated round r1-r12,
-    # per-decl code untouched) step out for exactly one round, covered
-    # meanwhile by the repo's own sf0.01/sf0.1 full-catalog parity
-    # sweeps, and return in round 14 under rule 2.  All 10 seats were
-    # pre-verified hash-green at sf0.01 by tools/parity_sweep.py after
-    # this round's ADVICE fixes landed (c90 node/n_row checkpointing,
-    # c91 query-term normalization).  After this window seats green,
-    # driver-grade evidence is back to the full catalog (155/155).
-    # Rule-3 queue unchanged for r14+: c36/c43/c46 (r2), then the r3
-    # batch (b9_join_semi c13_knn_all c21_json_agg c32_profile
-    # c49_token_budget_mix c51_from_json c9b_session_window).
-    # Round 14 (VERDICT r13 #7): the 10 r13 rule-1 seats (b55-b60,
-    # c89-c92 — all hash-green in CORRECTNESS_r13) rotate out, and the
-    # r13 one-round swap is honored: b5_approx_distinct / b26_cte /
-    # b27_having are RESTORED to the pins above (rule 2), growing the
-    # pinned block back to 43. The 7 remaining seats follow the rule-3
-    # oldest-driver-row queue: the r2-era trio c36/c43/c46, then four of
-    # the r3 batch (b9_join_semi, c13_knn_all, c21_json_agg,
-    # c32_profile); c49/c51/c9b queue for r15.
+    # Rotation seats (rule 3: the oldest driver rows)
     "c36_dedup_clusters", "c43_keep_best_per_cluster", "c46_decontaminate",
     "b9_join_semi", "c13_knn_all", "c21_json_agg", "c32_profile",
 )

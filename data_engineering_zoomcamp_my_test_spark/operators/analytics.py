@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.exprs import dmoney_sum, money
+from ..functions.exprs import MONEY_SUM_VALUE, dmoney_sum, money
 from ..lineage import cut as lineage_cut
 from ..sources.tables import load_table
 
@@ -712,7 +712,6 @@ def pagerank(
     dst_col: str = "dst",
     n_iter: int = PAGERANK_ITER,
     damping: float = PAGERANK_DAMPING,
-    checkpoint: bool = True,
     complete_inbound: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank (Page et al. 1999) as an iterative
@@ -740,9 +739,8 @@ def pagerank(
     cannot exist. Fixed iteration count (not convergence-tested) keeps
     the result deterministic and oracle-expressible.
 
-    ``checkpoint=False`` skips the lineage cuts so the composed
-    iteration PLAN stays inspectable (plan-posture tests); production
-    and the decl keep the default.
+    ``SPARK_GRAFT_LINEAGE_CUT=off`` skips the lineage cuts so the
+    composed iteration PLAN stays inspectable (plan-posture tests).
 
     r13 optimizations (result-identical, measured 1.4x at sf0.1):
 
@@ -761,8 +759,7 @@ def pagerank(
       iteration, same values (the left join's null arm is unreachable
       when every node receives a contribution).
     """
-    cut = lineage_cut if checkpoint else (lambda df: df)
-    edges = cut(edges)
+    edges = lineage_cut(edges)
     if nodes is None:
         nodes = edges.select(F.col(src_col).alias(node_col)).distinct()
     # Checkpoint nodes BEFORE anything else derives from it: the loop body
@@ -770,12 +767,12 @@ def pagerank(
     # nodes lineage would re-execute n_iter times.  n_row is likewise cut so
     # the broadcast count is a materialized one-row scan, not a
     # per-iteration re-aggregation of the node relation.
-    nodes = cut(nodes)
-    n_row = cut(nodes.agg(F.count(F.lit(1)).alias("n_nodes")))
+    nodes = lineage_cut(nodes)
+    n_row = lineage_cut(nodes.agg(F.count(F.lit(1)).alias("n_nodes")))
     deg = edges.groupBy(src_col).agg(F.count(F.lit(1)).alias("outdeg"))
-    eout = cut(edges.join(deg, src_col))
+    eout = lineage_cut(edges.join(deg, src_col))
     teleport = 1.0 - damping
-    ranks = cut(
+    ranks = lineage_cut(
         nodes.crossJoin(F.broadcast(n_row))
         .select(node_col, (F.lit(1.0) / F.col("n_nodes")).alias("rank"))
     )
@@ -788,7 +785,7 @@ def pagerank(
         )
         sums = contribs.groupBy(node_col).agg(F.sum("contrib").alias("s"))
         if complete_inbound:
-            ranks = cut(
+            ranks = lineage_cut(
                 sums.crossJoin(F.broadcast(n_row)).select(
                     node_col,
                     (
@@ -798,7 +795,7 @@ def pagerank(
                 )
             )
         else:
-            ranks = cut(
+            ranks = lineage_cut(
                 nodes.join(sums, node_col, "left")
                 .crossJoin(F.broadcast(n_row))
                 .select(
@@ -891,7 +888,7 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def oriented_triangles(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
+def oriented_triangles(edges: DataFrame) -> DataFrame:
     """Closed triangles (a, b, c) of an undirected graph given as
     CANONICAL edges (src < dst, deduped), computed with DEGREE-ORDERED
     orientation — the exact skew mitigation the id-ordered plan lacks
@@ -916,17 +913,16 @@ def oriented_triangles(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
     (b, c) — all keyed, no cartesian. Output columns (a, b, c) are in
     RANK order (deg, then id), not id order.
 
-    ``checkpoint=True`` (r13): the shared relations — ``edges`` (in the
+    Lineage cuts (r13): the shared relations — ``edges`` (in the
     decl, a lineitem self-join + distinct) and the directed relation
     ``d`` (referenced by BOTH wedge sides and the closure probe) — are
     ``localCheckpoint``ed once, the same lineage policy as pagerank().
     Without the cuts Catalyst inlines every reference: the composed c92
     plan instantiated the edge derivation 15x (60 parquet scans, 64
     Exchanges, zero ReusedExchange) — at 100x that is 15 redundant
-    passes over the fact table. ``checkpoint=False`` keeps the pure
-    composed plan inspectable for plan-posture tests."""
-    cut = lineage_cut if checkpoint else (lambda df: df)
-    edges = cut(edges)
+    passes over the fact table. ``SPARK_GRAFT_LINEAGE_CUT=off`` keeps the
+    pure composed plan inspectable for plan-posture tests."""
+    edges = lineage_cut(edges)
     deg = (
         edges.select(
             F.explode(F.array(F.col("src"), F.col("dst"))).alias("node")
@@ -944,7 +940,7 @@ def oriented_triangles(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
         )
     )
     src_first = F.struct("sdeg", "src") < F.struct("ddeg", "dst")
-    d = cut(
+    d = lineage_cut(
         e.select(
             F.when(src_first, F.col("src")).otherwise(F.col("dst")).alias("x"),
             F.when(src_first, F.col("dst")).otherwise(F.col("src")).alias("y"),
@@ -984,14 +980,12 @@ def oriented_triangles(edges: DataFrame, checkpoint: bool = True) -> DataFrame:
     return w.join(closer, ["b", "c"])
 
 
-def triangle_counts_oriented(
-    edges: DataFrame, checkpoint: bool = True
-) -> DataFrame:
+def triangle_counts_oriented(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts via the degree-ordered plan — exact, same
     result as triangle_counts(), O(m^1.5) wedge work instead of
     sum deg^2."""
     return (
-        oriented_triangles(edges, checkpoint=checkpoint)
+        oriented_triangles(edges)
         .select(
             F.explode(F.array(F.col("a"), F.col("b"), F.col("c"))).alias(
                 "node"
@@ -1197,8 +1191,6 @@ QUERIES = {
     "c93_triangle_global_approx": c93_triangle_global_approx,
 }
 
-_MONEY_SUM_VALUE = "CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)"
-
 ORACLE = {
     "c90_pagerank": _pagerank_oracle_sql(),
     "c92_triangle_count": _TRIANGLE_ORACLE,
@@ -1263,7 +1255,7 @@ ORACLE = {
                MIN(ts_us) AS session_start_us,
                MAX(ts_us) + 1800000000 AS session_end_us,
                COUNT(*) AS n_events,
-               {_MONEY_SUM_VALUE} AS total_value
+               {MONEY_SUM_VALUE} AS total_value
         FROM numbered GROUP BY user_id, seq
     """,
     "c24_percentiles": """
@@ -1277,7 +1269,7 @@ ORACLE = {
     "c25_histogram": f"""
         SELECT CAST(FLOOR(value / 50) AS BIGINT) AS bucket,
                COUNT(*) AS n,
-               {_MONEY_SUM_VALUE} AS bucket_sum
+               {MONEY_SUM_VALUE} AS bucket_sum
         FROM events GROUP BY 1 ORDER BY 1
     """,
     "b31_pivot": """

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.exprs import dmoney_sum, money
+from ..functions.exprs import MONEY_SUM_VALUE, dmoney_sum, money
 from ..lineage import cut as lineage_cut
 from ..sources.tables import load_table
 from ..streaming.stateful import streaming_user_ledger_exact
@@ -699,8 +699,6 @@ QUERIES = {
     "c61_resample_ffill": c61_resample_ffill,
 }
 
-_MONEY_SUM_VALUE = "CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)"
-
 # shared by the batch decl (c72) and its streaming replay twin (c86)
 _ATTRIBUTION_ORACLE = """
     WITH v AS (
@@ -796,7 +794,7 @@ ORACLE = {
     "c7_tumbling": f"""
         SELECT CAST(epoch_us(date_trunc('hour', ts)) AS BIGINT) AS window_start_us,
                event_type, COUNT(*) AS n_events,
-               {_MONEY_SUM_VALUE} AS total_value
+               {MONEY_SUM_VALUE} AS total_value
         FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
     # The streaming twin must converge to the exact batch answer — same
@@ -804,7 +802,7 @@ ORACLE = {
     "c66_streaming_tumbling": f"""
         SELECT CAST(epoch_us(date_trunc('hour', ts)) AS BIGINT) AS window_start_us,
                event_type, COUNT(*) AS n_events,
-               {_MONEY_SUM_VALUE} AS total_value
+               {MONEY_SUM_VALUE} AS total_value
         FROM events GROUP BY 1, 2
     """,
     "c8_sliding": f"""
@@ -816,7 +814,7 @@ ORACLE = {
         )
         SELECT CAST(epoch_us(w_start) AS BIGINT) AS window_start_us,
                COUNT(*) AS n_events,
-               {_MONEY_SUM_VALUE} AS total_value
+               {MONEY_SUM_VALUE} AS total_value
         FROM starts GROUP BY 1 ORDER BY 1
     """,
     "c9_session": f"""
@@ -839,7 +837,7 @@ ORACLE = {
                MIN(ts_us) AS session_start_us,
                MAX(ts_us) AS session_end_us,
                COUNT(*) AS n_events,
-               {_MONEY_SUM_VALUE} AS total_value
+               {MONEY_SUM_VALUE} AS total_value
         FROM numbered GROUP BY user_id, session_seq
     """,
     "c44_session_funnel": f"""
@@ -909,7 +907,7 @@ ORACLE = {
         )
         SELECT CAST(epoch_us(w_start) AS BIGINT) AS window_start_us,
                COUNT(*) AS n_events,
-               {_MONEY_SUM_VALUE} AS total_value
+               {MONEY_SUM_VALUE} AS total_value
         FROM starts GROUP BY 1
     """,
     "c78_streaming_session": f"""
@@ -930,7 +928,7 @@ ORACLE = {
                MIN(ts_us) AS session_start_us,
                MAX(ts_us) + 1800000000 AS session_end_us,
                COUNT(*) AS n_events,
-               {_MONEY_SUM_VALUE} AS total_value
+               {MONEY_SUM_VALUE} AS total_value
         FROM numbered GROUP BY user_id, seq
     """,
     "c77_mad_anomaly": """

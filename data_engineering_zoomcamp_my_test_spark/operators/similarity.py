@@ -267,7 +267,6 @@ def c4_lsh_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 def c19_ivf_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     model, assigned = ivf_index(emb, n_cells=8)
-    assigned = assigned.persist()
     # n_probe=4 of 8 cells: measured recall >= 0.9 vs brute force on the
     # synthetic corpus (tests/test_properties.py pins this bound)
     return ivf_search(

@@ -22,6 +22,20 @@ from ..functions.text import (
 from ..lineage import cut as lineage_cut
 from ..sources.tables import load_table
 
+
+def _bigrams(toks: F.Column) -> F.Column:
+    """Consecutive pairs of the token array ``toks`` as structs (w1, w2):
+    ``arrays_zip`` over two shifted slices, NOT ``transform(sequence, i ->
+    ...)``. The per-index lambda is an interpreted higher-order expression
+    (~19x slower measured at sf1 — 14.2s -> 0.8s for 2.7M bigrams); the
+    zip of slices is a single array op per row."""
+    n = F.size(toks)
+    return F.arrays_zip(
+        F.slice(toks, 1, n - 1).alias("w1"),
+        F.slice(toks, 2, n - 1).alias("w2"),
+    )
+
+
 # Polynomial rolling-hash fingerprint over the normalized text characters:
 # acc = (acc * 31 + ascii(char)) mod 1_000_000_007. Same arithmetic is
 # expressible in oracle SQL, so the fingerprints are verifiable.
@@ -547,21 +561,17 @@ def bigram_stats(docs: DataFrame, top_heads: int = 50) -> DataFrame:
     standard smell test for template-generated text, which shows abnormally
     peaked continuation distributions).
 
-    Plan: one explode of consecutive-pair structs (JVM ``transform`` over
-    ``sequence`` — docs shorter than 2 tokens are filtered first because
-    Spark's ``sequence(1, 0)`` counts DOWN, not empty), one (w1, w2)
-    groupBy, then a partial-aggregating ``min_by`` argmax per head — the
-    same window-free top-1 pattern as c37. No Python, no window sort over
-    the bigram stream."""
-    toks = docs.select(F.split("text", " ").alias("w")).filter(
-        F.size("w") >= 2
+    Plan: one explode of consecutive-pair structs (``_bigrams``, docs
+    shorter than 2 tokens filtered first), one (w1, w2) groupBy, then a
+    partial-aggregating ``min_by`` argmax per head — the same window-free
+    top-1 pattern as c37. No Python, no window sort over the bigram
+    stream."""
+    toks = F.split("text", " ")
+    bg = (
+        docs.filter(F.size(toks) >= 2)
+        .select(F.explode(_bigrams(toks)).alias("b"))
+        .select("b.w1", "b.w2")
     )
-    bg = toks.select(
-        F.expr(
-            "explode(transform(sequence(1, size(w) - 1), "
-            "i -> struct(w[i-1] AS w1, w[i] AS w2)))"
-        ).alias("b")
-    ).select("b.w1", "b.w2")
     cnt = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c"))
     agg = cnt.groupBy("w1").agg(
         F.count(F.lit(1)).alias("n_cont"),
@@ -819,21 +829,12 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
 
     docs = _spread_for_cpu(docs)
     toks = F.split("text", " ")
-    n = F.size(toks)
-    # arrays_zip over two shifted slices, NOT transform(sequence, i ->
-    # element_at(...)): the per-index lambda is an interpreted higher-order
-    # expression (~19x slower measured at sf1 — 14.2s -> 0.8s for 2.7M
-    # bigrams); the zip of slices is a single array op per row.
-    pairs = F.arrays_zip(
-        F.slice(toks, 1, n - 1).alias("w1"),
-        F.slice(toks, 2, n - 1).alias("w2"),
-    )
     # ``bi`` feeds BOTH the count aggregate and the scoring join;
     # Catalyst inlines each reference, so without a lineage cut the
     # corpus tokenization + zip-of-slices explode executes twice.
     bi = (
-        docs.filter(n >= 2)
-        .select("doc_id", F.explode(pairs).alias("p"))
+        docs.filter(F.size(toks) >= 2)
+        .select("doc_id", F.explode(_bigrams(toks)).alias("p"))
         .select("doc_id", "p.w1", "p.w2")
         .transform(lineage_cut)
     )
@@ -881,7 +882,7 @@ def pmi_collocations(
     BEFORE ranking (so the top-k boundary cannot flip on a cross-engine
     ulp), and ties break lexicographically.
 
-    Plan: the same zip-of-slices bigram explode as c75, one keyed groupBy
+    Plan: the same ``_bigrams`` explode as c75, one keyed groupBy
     each for bigram and unigram counts, the two corpus totals attach as a
     single-row broadcast (constant attach, same whitelist rationale as
     b26/c75), and the final top-k is a TakeOrderedAndProject — never a
@@ -890,14 +891,9 @@ def pmi_collocations(
 
     docs = _spread_for_cpu(docs)
     toks = F.split("text", " ")
-    n = F.size(toks)
-    pairs = F.arrays_zip(
-        F.slice(toks, 1, n - 1).alias("w1"),
-        F.slice(toks, 2, n - 1).alias("w2"),
-    )
     bi = (
-        docs.filter(n >= 2)
-        .select(F.explode(pairs).alias("p"))
+        docs.filter(F.size(toks) >= 2)
+        .select(F.explode(_bigrams(toks)).alias("p"))
         .select("p.w1", "p.w2")
     )
     uni = docs.select(F.explode(toks).alias("t"))

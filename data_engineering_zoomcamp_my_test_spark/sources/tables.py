@@ -19,9 +19,9 @@ fingerprint still matches pass that schema to the reader and launch no job,
 and the session that made the last read gets that normalized frame back
 without a reader call. Any rewrite changes the fingerprint, re-infers and
 replaces the entry (one entry per path, never a stale schema or frame); a
-different or stopped session reads afresh. Paths with no local files —
-URIs such as ``s3a://``, ``hdfs://`` or ``file:``, and missing paths, for
-which Spark raises its own error — bypass the cache.
+different session reads afresh, and a stopped one raises. Paths with no
+local files — URIs such as ``s3a://``, ``hdfs://`` or ``file:``, and
+missing paths, for which Spark raises its own error — bypass the cache.
 
 At 100 TB each "file" becomes a directory of many parquet parts (possibly
 hive-partitioned); nothing here assumes single-file inputs — paths are passed
@@ -127,9 +127,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     UTC-timezone invariant the NTZ->LTZ cast relies on cannot be bypassed
     by a foreign session that loads tables before configuring itself. That
     also pins both settings that change inference (``nanosAsLong=true``,
-    ``inferTimestampNTZ=false``), so the cache key needs no conf.
+    ``inferTimestampNTZ=false``), so the cache key needs no conf, and
+    raises a ``RuntimeError`` on a stopped session.
 
-    A repeat load of unchanged local files by the same live session
+    A repeat load of unchanged local files by the same session
     returns the frame it got last time: building one costs a DataSource
     resolution and file listing in the JVM (~10 ms), even with the schema
     known. A URI (``s3a://``, ``file:``...) names no local file, so its
@@ -147,7 +148,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if hit is None or hit.fingerprint != fp:
         raw = spark.read.parquet(path)
         schema = raw.schema
-    elif hit.frame.sparkSession is spark and spark._sc._jsc is not None:  # noqa: SLF001
+    elif hit.frame.sparkSession is spark:
         return hit.frame
     else:
         schema = hit.schema

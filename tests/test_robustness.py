@@ -395,9 +395,9 @@ def test_load_table_warm_read_returns_memoized_frame(spark, sf_small, monkeypatc
 
 
 def test_load_table_other_session_gets_its_own_read(spark, sf_small, monkeypatch):
-    """A frame is bound to the session that read it: another session, or a
-    stopped one, gets a fresh read (from the cached schema, so no job), and
-    the entry then serves whichever session read last."""
+    """A frame is bound to the session that read it: another session gets
+    a fresh read (from the cached schema, so no job), the entry then
+    serves whichever session read last, and a stopped session is refused."""
     from data_engineering_zoomcamp_my_test_spark.sources import tables
 
     monkeypatch.setattr(tables, "_TABLES", {})
@@ -413,11 +413,12 @@ def test_load_table_other_session_gets_its_own_read(spark, sf_small, monkeypatch
     assert len(tables._TABLES) == 1
 
     # SparkSession.stop() clears the context's JVM handle; the same Python
-    # session object must not be served its old frame afterwards.
+    # session object must then raise, not be served its old frame or a
+    # fresh one whose first action fails opaquely.
     monkeypatch.setattr(spark.sparkContext, "_jsc", None)
-    stopped = tables.load_table(spark, sf_small, "orders")
+    with pytest.raises(RuntimeError, match="SparkSession is stopped"):
+        tables.load_table(spark, sf_small, "orders")
     monkeypatch.undo()
-    assert stopped is not again
 
 
 def test_load_table_memo_hit_still_pins_foreign_confs(spark, sf_small, monkeypatch):

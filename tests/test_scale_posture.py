@@ -643,8 +643,10 @@ def test_bm25_term_list_broadcasts_and_no_cartesian(spark, sf_small):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_pagerank_iteration_plan_is_keyed_joins_no_cartesian(spark, sf_small):
-    """c90's loop body (checkpoint=False so the composed plan stays
+def test_pagerank_iteration_plan_is_keyed_joins_no_cartesian(
+    spark, sf_small, monkeypatch
+):
+    """c90's loop body (lineage cuts off so the composed plan stays
     inspectable): one iteration = ranks ⋈ edges keyed on src + a
     partial-aggregating sum keyed on dst. No CartesianProduct anywhere;
     the teleport constant attaches via broadcast (one-row N frame)."""
@@ -667,7 +669,8 @@ def test_pagerank_iteration_plan_is_keyed_joins_no_cartesian(spark, sf_small):
         .distinct()
     )
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    pr = pagerank(nodes, edges, n_iter=1, checkpoint=False)
+    monkeypatch.setenv("SPARK_GRAFT_LINEAGE_CUT", "off")
+    pr = pagerank(nodes, edges, n_iter=1)
     plan = explain_str(pr, "simple")
     assert "CartesianProduct" not in plan, plan
     # the one-row N frame must attach as a broadcast, not a shuffle
@@ -1106,3 +1109,33 @@ def test_env_reads_go_through_typed_readers():
         found |= v.found
     assert found - allowed == set(), sorted(found - allowed)
     assert ("session.py", "env_jvm_size") in found
+
+
+def test_core_count_is_read_only_by_the_session():
+    """session.py alone decides how many cores a session gets: no other
+    program file names ``SPARK_GRAFT_CPUS`` (perfbench/ sizes its own
+    harness run, and the tests may set it)."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    allowed = {pathlib.Path("data_engineering_zoomcamp_my_test_spark/session.py")}
+    hits = sorted(
+        str(rel)
+        for rel in (p.relative_to(repo) for p in repo.rglob("*.py"))
+        if rel.parts[0] not in ("perfbench", "tests")
+        and not rel.parts[0].startswith(".")
+        and rel not in allowed
+        and "SPARK_GRAFT_CPUS" in (repo / rel).read_text()
+    )
+    assert hits == []
+
+
+def test_c19_builds_leave_no_persisted_relation(spark, sf_small):
+    """c19 reads its assigned corpus once, so a build must not pin it in
+    the block manager: two builds and counts in one session leave no new
+    persistent RDD behind (the cleaner may drop older ones meanwhile)."""
+    jsc = spark.sparkContext._jsc  # noqa: SLF001
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(2):
+        assert all_queries()["c19_ivf_knn"](spark, sf_small).count() > 0
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()

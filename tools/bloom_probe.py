@@ -60,10 +60,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/bloom_probe_sf100")
     args = ap.parse_args()
-    spark = get_spark(
-        EngineConfig(master=f"local[{os.cpu_count() or 8}]",
-                     shuffle_partitions=32, app_name="bloom_probe")
-    )
+    spark = get_spark(EngineConfig(app_name="bloom_probe"))
     spark.sparkContext.setLogLevel("ERROR")
     li = spark.read.parquet(f"{args.sf_dir}/lineitem.parquet")
     od = spark.read.parquet(f"{args.sf_dir}/orders.parquet")

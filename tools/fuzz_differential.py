@@ -949,7 +949,6 @@ def main() -> int:
     )
     ap.add_argument("--emit", type=int, default=None, help="print query i and exit")
     ap.add_argument("--row-cap", type=int, default=200_000)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     args = ap.parse_args()
 
     shapes = args.shapes.split(",") if args.shapes else None
@@ -965,13 +964,7 @@ def main() -> int:
 
     from data_engineering_zoomcamp_my_test_spark.session import EngineConfig, get_spark
 
-    spark = get_spark(
-        EngineConfig(
-            master=f"local[{args.cpus}]",
-            shuffle_partitions=args.cpus,
-            app_name="fuzz-differential",
-        )
-    )
+    spark = get_spark(EngineConfig(app_name="fuzz-differential"))
     out = run_campaign(spark, args.sf_dir, args.n, args.seed, shapes, row_cap=args.row_cap)
     print(json.dumps(out))
     return 1 if (out["fail"] or out["err"]) else 0

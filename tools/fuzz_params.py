@@ -1324,7 +1324,6 @@ def main() -> int:
     ap.add_argument("--ops", default=None, help="comma list from: " + ",".join(OPERATORS))
     ap.add_argument("--emit", type=int, default=None, help="print case i and exit")
     ap.add_argument("--row-cap", type=int, default=200_000)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     args = ap.parse_args()
 
     ops = None
@@ -1341,13 +1340,7 @@ def main() -> int:
 
     from data_engineering_zoomcamp_my_test_spark.session import EngineConfig, get_spark
 
-    spark = get_spark(
-        EngineConfig(
-            master=f"local[{args.cpus}]",
-            shuffle_partitions=args.cpus,
-            app_name="fuzz-params",
-        )
-    )
+    spark = get_spark(EngineConfig(app_name="fuzz-params"))
     out = run_campaign(
         spark, args.sf_dir, args.n, args.seed, ops, row_cap=args.row_cap
     )

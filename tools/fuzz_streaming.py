@@ -647,12 +647,7 @@ def main() -> int:
 
     from data_engineering_zoomcamp_my_test_spark.session import EngineConfig, get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark = get_spark(
-        EngineConfig(
-            master=f"local[{cpus}]", shuffle_partitions=cpus, app_name="fuzz_streaming"
-        )
-    )
+    spark = get_spark(EngineConfig(app_name="fuzz_streaming"))
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     out = run_campaign(spark, args.sf_dir, args.n, args.seed, ops)

@@ -174,9 +174,6 @@ def _ref_moments(
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", required=True)
-    ap.add_argument(
-        "--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
     args = ap.parse_args()
 
     t0 = time.time()
@@ -193,13 +190,7 @@ def main() -> int:
     ref = _ref_moments(groups, rep_pairs)
     print(f"reference moments ({time.time() - t1:.1f}s): {ref}", flush=True)
 
-    spark = get_spark(
-        EngineConfig(
-            master=f"local[{args.cpus}]",
-            shuffle_partitions=args.cpus,
-            app_name="lsh_pairs_check",
-        )
-    )
+    spark = get_spark(EngineConfig(app_name="lsh_pairs_check"))
     spark.sparkContext.setLogLevel("ERROR")
 
     # Layer 1: rep-level pair set, row-for-row (cost ~ distinct texts).

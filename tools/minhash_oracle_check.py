@@ -43,17 +43,10 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--sample", type=int, default=200)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
     t0 = time.time()
-    spark = get_spark(
-        EngineConfig(
-            master=f"local[{args.cpus}]",
-            shuffle_partitions=args.cpus,
-            app_name="minhash-oracle-check",
-        )
-    )
+    spark = get_spark(EngineConfig(app_name="minhash-oracle-check"))
     docs = load_table(spark, args.sf_dir, "documents")
     n_docs = docs.count()
     stride = max(n_docs // args.sample, 1)

@@ -50,10 +50,7 @@ def main() -> int:
     ap.add_argument("--skip", nargs="*", default=list(DEFAULT_SKIP))
     args = ap.parse_args()
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    spark = get_spark(
-        EngineConfig(master=f"local[{cpus}]", shuffle_partitions=cpus, app_name="parity_sweep")
-    )
+    spark = get_spark(EngineConfig(app_name="parity_sweep"))
     spark.sparkContext.setLogLevel("ERROR")
     queries, oracles = all_queries(), all_oracle_sql()
     names = sorted(args.only) if args.only else sorted(oracles)

@@ -26,7 +26,6 @@ from data_engineering_zoomcamp_my_test_spark.session import EngineConfig, get_sp
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     action_kind = os.environ.get("SPARK_GRAFT_ACTION", "count")
     if action_kind not in ("count", "hash"):
         raise SystemExit(f"sweep: unknown SPARK_GRAFT_ACTION {action_kind!r}")
@@ -38,12 +37,7 @@ def main() -> int:
     if ev_dir:
         os.makedirs(ev_dir, exist_ok=True)
         extra = {"spark.eventLog.enabled": "true", "spark.eventLog.dir": ev_dir}
-    spark = get_spark(
-        EngineConfig(
-            master=f"local[{cpus}]", shuffle_partitions=cpus, app_name="sweep",
-            extra=extra,
-        )
-    )
+    spark = get_spark(EngineConfig(app_name="sweep", extra=extra))
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
     # SPARK_GRAFT_ONLY=comma,separated,decls restricts the sweep — used for
